@@ -30,8 +30,8 @@ import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-END_TO_END = ("setup_s", "p50_ms", "ops_per_s")
-E2E_UNITS = {"setup_s": "s", "p50_ms": "ms", "ops_per_s": "1/s"}
+END_TO_END = ("setup_s", "p50_cpu_ms", "ops_per_cpu_s")
+E2E_UNITS = {"setup_s": "s", "p50_cpu_ms": "ms", "ops_per_cpu_s": "1/s"}
 
 
 def _commit() -> str:
@@ -108,9 +108,11 @@ def main() -> int:
 
     run.metrics["setup_s"] = sum(run.setup_parts.values())
     report = {"workload": args.workload, "env": env,
-              "setup_parts_s": run.setup_parts, **run.report}
+              "setup_parts_cpu_s": run.setup_parts,
+              "setup_wall_s": sum(run.setup_wall.values()),
+              "setup_parts_wall_s": run.setup_wall, **run.report}
     if run.tracer is not None:
-        for k in ("p50_ms", "ops_per_s"):
+        for k in ("p50_cpu_ms", "ops_per_cpu_s"):
             run.layers[f"traced.{k}"] = run.metrics[k]
         report["self_s"] = wl.self_times(run.tracer.spans)
         report["dominant"] = wl.dominant_layer(run)

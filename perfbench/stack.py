@@ -16,7 +16,6 @@ from pathlib import Path
 from typing import NamedTuple
 
 from perfbench import gen
-from perfbench.stats import cpu_ticks, steal_share
 
 NPROC = os.cpu_count() or 1
 
@@ -194,18 +193,15 @@ class Reply(NamedTuple):
     hits: list | None  # None when the request failed
     req: dict
     err: str | None
-    done: float  # completion, seconds after the loop started
 
 
 def closed_loop(daemon: Daemon, stream, seconds: float, clients: int,
-                tracer=None, slots: int = 1):
+                tracer=None):
     """`clients` threads, each sending its next request only when the
-    previous reply is in, for `seconds`. The window is cut into `slots`
-    equal slots, and the host's CPU steal is sampled at each boundary.
-    Returns the replies and the slots as (start, end, steal share)."""
+    previous reply is in, for `seconds`. Returns the replies."""
     it = iter(enumerate(stream))
     it_lock = threading.Lock()
-    records: list[tuple] = []
+    records: list[Reply] = []
     rec_lock = threading.Lock()
 
     def worker():
@@ -226,30 +222,77 @@ def closed_loop(daemon: Daemon, stream, seconds: float, clients: int,
                     else:
                         with tracer.span("plans.daemon", req["type"]):
                             hits = c.search(req)
-                except (OSError, RuntimeError, http.client.HTTPException,
-                        ValueError) as e:  # counted as a failed request
+                except _FAILURES as e:  # counted as a failed request
                     err = repr(e)
                     c.close()
                     c = daemon.client()
                 t1 = time.perf_counter()
-                mine.append(Reply(i, cheap, t1 - t0, hits, req, err,
-                                  t1 - start))
+                mine.append(Reply(i, cheap, t1 - t0, hits, req, err))
         finally:
             c.close()
             with rec_lock:
                 records.extend(mine)
 
     threads = [threading.Thread(target=worker) for _ in range(clients)]
-    start = time.perf_counter()
-    deadline = start + seconds
-    marks = [(0.0, cpu_ticks())]
+    deadline = time.perf_counter() + seconds
     for th in threads:
         th.start()
-    for k in range(1, slots):
-        time.sleep(max(0.0, start + k * seconds / slots - time.perf_counter()))
-        marks.append((time.perf_counter() - start, cpu_ticks()))
     for th in threads:
         th.join()
-    marks.append((time.perf_counter() - start, cpu_ticks()))
-    return records, [(a[0], b[0], steal_share(a[1], b[1]))
-                     for a, b in zip(marks, marks[1:])]
+    return records
+
+
+_FAILURES = (OSError, RuntimeError, http.client.HTTPException, ValueError)
+
+
+def thread_cpu_ns(pid: int) -> dict[int, int]:
+    """On-CPU nanoseconds of each live thread of process `pid`, from
+    /proc/<pid>/task/*/schedstat. The scheduler leaves out time the
+    hypervisor stole, so these do not grow while a vCPU waits."""
+    out = {}
+    base = f"/proc/{pid}/task"
+    for tid in os.listdir(base):
+        try:
+            with open(f"{base}/{tid}/schedstat") as f:
+                out[int(tid)] = int(f.read().split()[0])
+        except (OSError, ValueError, IndexError):
+            pass  # the thread exited meanwhile
+    return out
+
+
+def cpu_between(before: dict[int, int], after: dict[int, int]) -> float:
+    """Seconds of CPU the process's threads ran between two
+    thread_cpu_ns() samples (threads started meanwhile count whole)."""
+    return sum(ns - before.get(tid, 0) for tid, ns in after.items()) / 1e9
+
+
+def metered_loop(daemon: Daemon, stream, seconds: float):
+    """One client in closed loop for `seconds`: at most one request is
+    in the daemon at a time, so the daemon's CPU time between two
+    replies is the cost of the second request. Returns (reply, daemon
+    CPU seconds) pairs."""
+    pid = daemon.proc.pid
+    c = daemon.client()
+    out = []
+    try:
+        last = thread_cpu_ns(pid)
+        deadline = time.perf_counter() + seconds
+        for i, (cheap, req) in enumerate(stream):
+            t0 = time.perf_counter()
+            if t0 >= deadline:
+                break
+            hits, err = None, None
+            try:
+                hits = c.search(req)
+            except _FAILURES as e:  # counted as a failed request
+                err = repr(e)
+                c.close()
+                c = daemon.client()
+            t1 = time.perf_counter()
+            now = thread_cpu_ns(pid)
+            out.append((Reply(i, cheap, t1 - t0, hits, req, err),
+                        cpu_between(last, now)))
+            last = now
+    finally:
+        c.close()
+    return out

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import functools
 import itertools
+import os
 import threading
 import time
 
@@ -39,30 +40,32 @@ def median(values) -> float:
     return float(v[m]) if len(v) % 2 else (v[m - 1] + v[m]) / 2.0
 
 
-def cpu_ticks() -> tuple[int, int]:
-    """(steal, total) jiffies over all CPUs, from /proc/stat; (0, 0)
-    where there is none."""
+def cpu_ticks() -> tuple[int, int, int]:
+    """(steal, total, busy) jiffies over all CPUs, from /proc/stat;
+    zeros where there is none. Busy is user, nice, system, irq and
+    softirq time: it leaves out idle, I/O wait and steal."""
     try:
         with open("/proc/stat") as f:
             v = [int(x) for x in f.readline().split()[1:]]
     except (OSError, ValueError):
-        return 0, 0
-    return (v[7] if len(v) > 7 else 0), sum(v)
+        return 0, 0, 0
+    v += [0] * (8 - len(v))
+    return v[7], sum(v), v[0] + v[1] + v[2] + v[5] + v[6]
 
 
-def steal_share(before: tuple[int, int], after: tuple[int, int]) -> float:
+def steal_share(before: tuple, after: tuple) -> float:
     """Share of CPU time the hypervisor took between two cpu_ticks()."""
     return (after[0] - before[0]) / max(1, after[1] - before[1])
 
 
-QUIET_STEAL = 0.01  # a steal share the timings do not notice
+CLK_TCK = os.sysconf("SC_CLK_TCK")  # jiffies per second in /proc/stat
 
 
-def quiet(steals: list[float]) -> list[int]:
-    """Indices of the quieter half: steal share at most the median, or
-    at most QUIET_STEAL (so all of them on a quiet host)."""
-    m = max(median(steals), QUIET_STEAL)
-    return [i for i, s in enumerate(steals) if s <= m]
+def busy_seconds(before: tuple, after: tuple) -> float:
+    """CPU seconds all CPUs ran work between two cpu_ticks(): time the
+    hypervisor stole is not in it, so it does not grow with the host's
+    load the way wall time does."""
+    return (after[2] - before[2]) / CLK_TCK
 
 
 class Tracer:

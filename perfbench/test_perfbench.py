@@ -13,9 +13,10 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from perfbench import gen  # noqa: E402
+from perfbench.stack import cpu_between, thread_cpu_ns  # noqa: E402
 from perfbench.stats import (  # noqa: E402
-    Tracer, beyond, percentile, quiet, self_times, steal_share,
-    tail_percentile)
+    CLK_TCK, Tracer, beyond, busy_seconds, cpu_ticks, percentile,
+    self_times, steal_share, tail_percentile)
 
 
 def test_percentile_nearest_rank():
@@ -40,12 +41,27 @@ def test_tail_percentile_keeps_ten_samples_beyond():
         assert beyond(n, tail_percentile(n)) >= 10
 
 
-def test_quiet_keeps_the_less_stolen_half():
-    assert quiet([0.10, 0.01, 0.02, 0.30, 0.00, 0.05]) == [1, 2, 4]
-    assert quiet([0.04, 0.012]) == [1]
-    assert quiet([0.004, 0.0, 0.009]) == [0, 1, 2]  # a quiet host: all
-    assert steal_share((10, 1000), (30, 1400)) == 0.05
-    assert steal_share((0, 0), (0, 0)) == 0.0  # no /proc/stat
+def test_cpu_accounting_leaves_out_steal_and_idle():
+    assert steal_share((10, 1000, 0), (30, 1400, 0)) == 0.05
+    assert steal_share((0, 0, 0), (0, 0, 0)) == 0.0  # no /proc/stat
+    assert busy_seconds((0, 0, 100), (0, 0, 100 + 3 * CLK_TCK)) == 3.0
+    steal, total, busy = cpu_ticks()
+    assert 0 <= steal <= total and 0 <= busy <= total
+
+
+def test_cpu_between_counts_new_threads_whole_and_drops_gone_ones():
+    before = {1: 5_000_000, 2: 1_000_000}
+    after = {1: 7_000_000, 3: 500_000}  # 2 exited, 3 started
+    assert cpu_between(before, after) == pytest.approx(0.0025)
+    import os
+    import time
+
+    mine = thread_cpu_ns(os.getpid())
+    assert os.getpid() in mine
+    t0 = time.thread_time()
+    while time.thread_time() - t0 < 0.05:
+        pass
+    assert cpu_between(mine, thread_cpu_ns(os.getpid())) >= 0.04
 
 
 def _span(sid, parent, layer, s, e):

@@ -18,8 +18,9 @@ import time
 from pathlib import Path
 
 from perfbench import gen, stack
-from perfbench.stats import (Tracer, cpu_ticks, median, percentile, quiet,
-                             self_times, steal_share, tail_percentile)
+from perfbench.stats import (Tracer, busy_seconds, cpu_ticks, median,
+                             percentile, self_times, steal_share,
+                             tail_percentile)
 
 SCORE_TOL = 1e-9
 SETUP_REPEATS = 3
@@ -28,11 +29,9 @@ SPARK_K = 5000  # above IndexSearcher.LOCAL_SEARCH_MAX_K: the Spark route
 CHECK_SAMPLE = 40  # daemon replies re-checked against in-process answers
 REPLAY_SECONDS = 6.0  # budget for the traced in-process replay
 BURST_SECONDS = 5.0  # daemon probe for workloads that do not serve
-# The host steals CPU in bursts, and serving latency doubles at 10-15%
-# steal. Metrics come from the quieter half of the timed window (the
-# repo's "load-gated" rule): the window is cut into SLOTS slots, and the
-# report also gives the ungated figures.
-SLOTS = 6
+# share of a serving window given to nproc concurrent clients; the rest
+# is one client whose requests are metered in daemon CPU time
+CONCURRENT_SHARE = 1 / 3
 
 # public functions the traced run wraps: LocalSearcher's methods, and
 # the kernels as (module, attribute, layer)
@@ -86,8 +85,8 @@ PER_LAYER = {
     "query.search_many_ms": ("ms", "lower"),
     "query.search_many_mixed_ms": ("ms", "lower"),
     "spark.noop_job_ms": ("ms", "lower"),
-    "traced.p50_ms": ("ms", "lower"),
-    "traced.ops_per_s": ("1/s", "higher"),
+    "traced.p50_cpu_ms": ("ms", "lower"),
+    "traced.ops_per_cpu_s": ("1/s", "higher"),
 }
 # the layer each workload is predicted to spend most of its time in
 # ("in-process serving": plans.serve and the kernels it calls, as
@@ -105,7 +104,9 @@ class Run:
         self.metrics: dict[str, float] = {}
         self.layers: dict[str, float] = {}
         self.report: dict = {}
+        # set-up stages: CPU seconds (the metric) and wall seconds
         self.setup_parts: dict[str, float] = {}
+        self.setup_wall: dict[str, float] = {}
         self.attempted = 0
         self.failed = 0
         self.spark = None
@@ -115,20 +116,25 @@ class Run:
 
     # -- set-up bookkeeping ---------------------------------------------
 
-    def once(self, name: str, fn):
-        t0 = time.perf_counter()
+    def _measured(self, fn):
+        t0, c0 = time.perf_counter(), cpu_ticks()
         out = fn()
-        self.setup_parts[name] = time.perf_counter() - t0
+        return out, time.perf_counter() - t0, busy_seconds(c0, cpu_ticks())
+
+    def once(self, name: str, fn):
+        out, wall, cpu = self._measured(fn)
+        self.setup_parts[name], self.setup_wall[name] = cpu, wall
         return out
 
     def repeated(self, name: str, fn, reps: int = SETUP_REPEATS):
-        """Run a set-up stage `reps` times; its median wall counts."""
-        walls, out = [], None
+        """Run a set-up stage `reps` times; its median counts."""
+        walls, cpus, out = [], [], None
         for _ in range(reps):
-            t0 = time.perf_counter()
-            out = fn()
-            walls.append(time.perf_counter() - t0)
-        self.setup_parts[name] = median(walls)
+            out, wall, cpu = self._measured(fn)
+            walls.append(wall)
+            cpus.append(cpu)
+        self.setup_parts[name] = median(cpus)
+        self.setup_wall[name] = median(walls)
         return out
 
     def check(self, ok: bool, what: str) -> None:
@@ -404,7 +410,8 @@ def _daemon_layers(run: Run, records, service: dict[int, float]) -> None:
 
 def _spark_calls(run: Run, searcher, calls, deadline=None):
     """Closed-loop IndexSearcher calls (one caller). Returns records
-    (kind, seconds, n_queries, argument, result, Spark jobs run)."""
+    (kind, seconds, n_queries, argument, result, Spark jobs run, busy
+    CPU seconds)."""
     sc = run.spark.sparkContext
     out = []
     for kind, arg in calls:
@@ -412,7 +419,7 @@ def _spark_calls(run: Run, searcher, calls, deadline=None):
             break
         group = f"perfbench-{next(run.job_groups)}"  # jobs stay per group
         sc.setJobGroup(group, kind)
-        t0 = time.perf_counter()
+        t0, c0 = time.perf_counter(), cpu_ticks()
         ctx = (run.tracer.span("plans.query", kind) if run.tracer
                else contextlib.nullcontext())
         with ctx:
@@ -424,9 +431,9 @@ def _spark_calls(run: Run, searcher, calls, deadline=None):
                 res, n = searcher.search_many_mixed(arg, SPARK_K), len(arg)
             else:
                 res, n = searcher.search_many(arg, 10), len(arg)
-        dt = time.perf_counter() - t0
+        dt, cpu = time.perf_counter() - t0, busy_seconds(c0, cpu_ticks())
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        out.append((kind, dt, n, arg, res, jobs))
+        out.append((kind, dt, n, arg, res, jobs, cpu))
     sc.setJobGroup("perfbench-idle", "idle")
     return out
 
@@ -467,22 +474,25 @@ def ingest(run: Run) -> None:
     walls, steps = [], []
     first = len(run.tracer.spans) if run.tracer else 0
     t_end = time.perf_counter() + run.seconds
-    steals = []
+    steals, busy = [], []
     while not walls or time.perf_counter() < t_end:
         root = run.work / f"index-{len(walls)}"
         t0, ticks = time.perf_counter(), cpu_ticks()
         step = stack.ingest(run.spark, root, base, delta)
         walls.append(time.perf_counter() - t0)
-        steals.append(steal_share(ticks, cpu_ticks()))
+        t1 = cpu_ticks()
+        steals.append(steal_share(ticks, t1))
+        busy.append(busy_seconds(ticks, t1))
         steps.append((root, step))
         if len(steps) > 1:
             shutil.rmtree(steps[-2][0], ignore_errors=True)
     run.window = (first, len(run.tracer.spans) if run.tracer else 0)
-    kept = [walls[i] for i in quiet(steals)]
-    run.metrics["p50_ms"] = median(kept) * 1e3
-    run.metrics["ops_per_s"] = n_turns * len(kept) / sum(kept)
-    run.report["cycles"] = {"walls_s": walls, "steal": steals,
-                            "kept": len(kept)}
+    run.metrics["p50_cpu_ms"] = median(busy) * 1e3
+    run.metrics["ops_per_cpu_s"] = n_turns * len(busy) / sum(busy)
+    run.report["cycles"] = {"cpu_s": busy, "wall_s": walls, "steal": steals,
+                            "wall_p50_ms": median(walls) * 1e3,
+                            "turns_per_wall_s": n_turns * len(walls)
+                            / sum(walls)}
     run.report["steps"] = [{k: v for k, v in s.items() if k.endswith("_s")}
                            for _r, s in steps]
 
@@ -516,8 +526,8 @@ def _serve_probe(run: Run, root: Path) -> None:
     stream = _probe_stream(run)
     service = _replay_in_process(run, root, stream)
     run.daemon = stack.Daemon(run.repo, root, run.work / "daemon.log")
-    records, _slots = stack.closed_loop(run.daemon, stream, BURST_SECONDS,
-                                        stack.NPROC, run.tracer)
+    records = stack.closed_loop(run.daemon, stream, BURST_SECONDS,
+                                stack.NPROC, run.tracer)
     _daemon_layers(run, records, service)
 
 
@@ -562,31 +572,39 @@ def serve(run: Run, stream, warm) -> None:
     run.spark = None
     _start_daemon(run, root, warm)
 
-    records, slots = stack.closed_loop(run.daemon, stream, run.seconds,
-                                       stack.NPROC, run.tracer, SLOTS)
-    ok = [r for r in records if r.hits is not None]
-    for r in records:
+    records = stack.closed_loop(run.daemon, stream,
+                                run.seconds * CONCURRENT_SHARE, stack.NPROC,
+                                run.tracer)
+    metered = stack.metered_loop(run.daemon, stream,
+                                 run.seconds * (1 - CONCURRENT_SHARE))
+    for r in records + [m[0] for m in metered]:
         run.check(r.hits is not None, f"request {r.req} failed: {r.err}")
-    keep = [slots[i] for i in quiet([s[2] for s in slots])]
-    kept = [r for r in ok if any(a <= r.done < b for a, b, _ in keep)]
-    lat = [r.seconds for r in kept]
-    run.metrics["p50_ms"] = median(lat) * 1e3
-    run.metrics["ops_per_s"] = len(kept) / sum(b - a for a, b, _ in keep)
-    cheap = [r.seconds for r in kept if r.cheap]
+    ok = [r for r in records if r.hits is not None]
+    cpu = [(r, c) for r, c in metered if r.hits is not None]
+    run.metrics["p50_cpu_ms"] = median([c for _r, c in cpu]) * 1e3
+    run.metrics["ops_per_cpu_s"] = len(cpu) / sum(c for _r, c in cpu)
+    lat = [r.seconds for r in ok]
+    cheap = [r.seconds for r in ok if r.cheap]
     q, qc = tail_percentile(len(lat)), tail_percentile(len(cheap))
-    run.report["latency"] = {
-        "n": len(lat), "n_cheap": len(cheap),
-        f"p{q}_ms": percentile(lat, q) * 1e3 if q else None,
-        f"cheap_p{qc}_ms": percentile(cheap, qc) * 1e3 if qc else None,
-        "slot_steal": [s[2] for s in slots],
-        "ungated": {"p50_ms": median([r.seconds for r in ok]) * 1e3,
-                    "ops_per_s": len(ok) / slots[-1][1]}}
+    run.report["daemon_cpu"] = {
+        "n": len(cpu),
+        "heavy_p50_ms": median([c for r, c in cpu if not r.cheap]) * 1e3,
+        "cheap_p50_ms": median([c for r, c in cpu if r.cheap]) * 1e3,
+        "wall_p50_ms": median([r.seconds for r, _c in cpu]) * 1e3}
+    run.report["concurrent"] = {
+        "clients": stack.NPROC, "n": len(lat), "n_cheap": len(cheap),
+        "p50_ms": median(lat) * 1e3,
+        # a tail only where ten samples lie beyond it
+        **({f"p{q}_ms": percentile(lat, q) * 1e3} if q else {}),
+        **({f"cheap_p{qc}_ms": percentile(cheap, qc) * 1e3} if qc else {}),
+        "ops_per_s": len(ok) / (run.seconds * CONCURRENT_SHARE)}
 
     from geospatial_spark.plans.serve import LocalSearcher
 
     ls = LocalSearcher(str(root), preload_docmaps=True)
     rng = random.Random(run.seed)
-    for r in rng.sample(ok, min(CHECK_SAMPLE, len(ok))):
+    replied = ok + [r for r, _c in cpu]
+    for r in rng.sample(replied, min(CHECK_SAMPLE, len(replied))):
         run.check(r.hits == _inproc(ls, r.req), f"daemon reply {r.req}")
     c = run.daemon.client()
     try:
@@ -632,15 +650,19 @@ def spark_batch(run: Run) -> None:
     recs = _spark_calls(run, searcher, calls,
                         deadline=t0 + run.seconds)
     elapsed = time.perf_counter() - t0
-    run.metrics["p50_ms"] = median([r[1] for r in recs]) * 1e3
-    run.metrics["ops_per_s"] = sum(r[2] for r in recs) / elapsed
+    run.metrics["p50_cpu_ms"] = median([r[6] for r in recs]) * 1e3
+    run.metrics["ops_per_cpu_s"] = (sum(r[2] for r in recs)
+                                    / sum(r[6] for r in recs))
     run.report["calls"] = {k: sum(1 for r in recs if r[0] == k)
                            for k in QUERY_KINDS}
+    run.report["calls_wall"] = {
+        "p50_ms": median([r[1] for r in recs]) * 1e3,
+        "queries_per_s": sum(r[2] for r in recs) / elapsed}
 
     ls = LocalSearcher(str(root), preload_docmaps=True)
     from geospatial_spark.plans.daemon import dispatch
 
-    for kind, _dt, _n, arg, res, _jobs in recs[:8]:
+    for kind, _dt, _n, arg, res, _jobs, _cpu in recs[:8]:
         if kind == "deep_k":
             run.check(_same_hits(res[:10], ls.search(arg, 10)),
                       f"deep-k prefix {arg}")
@@ -666,9 +688,10 @@ def dominant_layer(run: Run) -> dict:
     ingest: self time of the build and merge spans in the window.
     serving: the daemon's own share of the median latency (a cached
     round trip: HTTP and JSON) against serving work, which includes the
-    wait for query_lock; the in-process part is split by self time. spark_batch: the only in-process layer is
-    plans.query; the rest runs in Spark tasks, so the Spark fixed cost
-    is estimated as jobs per call × a no-op job's wall."""
+    wait for query_lock; the in-process part is split by self time.
+    spark_batch: the only in-process layer is plans.query; the rest runs
+    in Spark tasks, so the Spark fixed cost is estimated as jobs per
+    call × a no-op job's wall."""
     lay = run.layers
     if run.workload == "ingest":
         own = self_times(run.tracer.spans[run.window[0]:run.window[1]])
@@ -677,16 +700,19 @@ def dominant_layer(run: Run) -> dict:
     elif run.workload == "spark_batch":
         fixed = lay["query.spark_jobs_per_call"] * lay["spark.noop_job_ms"]
         measured = "plans.query"
-        basis = {"spark_fixed_share_est": fixed / run.metrics["p50_ms"]}
+        basis = {"spark_fixed_share_est":
+                 fixed / run.report["calls_wall"]["p50_ms"]}
     else:
         # lock wait is other requests' service time, so it counts as
         # serving work; the daemon's own cost is a cached round trip
-        share = lay["daemon.http_overhead_ms"] / run.metrics["p50_ms"]
+        # against the wall latency of the nproc-client phase
+        p50 = run.report["concurrent"]["p50_ms"]
+        share = lay["daemon.http_overhead_ms"] / p50
         in_proc = {k: lay[f"serve.self_ms.{k}"] for k in SERVE_LAYERS}
         measured = ("plans.daemon" if share > 0.5 else "in-process serving")
         basis = {"daemon_http_share_of_p50": share,
                  "lock_wait_share_of_p50":
-                     lay["daemon.queue_wait_ms"] / run.metrics["p50_ms"],
+                     lay["daemon.queue_wait_ms"] / p50,
                  "in_process_self_ms_per_request": in_proc,
                  "top_in_process_layer": max(in_proc, key=in_proc.get)}
     predicted = PREDICTED[run.workload]
