@@ -35,26 +35,18 @@ FACET_TIME_FIELDS = {"ts_day": "%Y-%m-%d", "ts_hour": "%Y-%m-%dT%H"}
 FACET_FIELDS = ("role",) + tuple(FACET_TIME_FIELDS)
 
 
-def facet_values(dm_path, field: str, ordinals: list[int]) -> list:
-    """The facet value per shard-local ordinal, from the shard's own
-    docmap file: stored fields read directly, time-bucket fields
-    derived from ts_us (UTC, second floor — µs never move a calendar
-    bucket). None = missing (excluded by the facet contract)."""
-    import datetime as _dt
-
-    import pyarrow.parquet as pq
+def facet_values(col, field: str):
+    """The facet value per row of a docmap column slice (a pyarrow
+    array): stored fields pass through, time-bucket fields format ts_us
+    as a UTC calendar bucket, vectorized (µs never move a calendar
+    bucket). Null = missing (excluded by the facet contract)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     fmt = FACET_TIME_FIELDS.get(field)
-    col_name = "ts_us" if fmt else field
-    col = pq.read_table(dm_path, columns=[col_name]).column(col_name)
-    vals = col.take(list(ordinals)).to_pylist()
     if fmt is None:
-        return vals
-    utc = _dt.timezone.utc
-    return [None if v is None else
-            _dt.datetime.fromtimestamp(int(v) // 1_000_000, tz=utc)
-            .strftime(fmt)
-            for v in vals]
+        return col
+    return pc.strftime(col.cast(pa.timestamp("us")), format=fmt)
 
 
 def _ts_us(v) -> int:
@@ -104,10 +96,12 @@ def normalize_meta(meta: dict | None) -> dict | None:
     unknown = set(meta) - known
     if unknown:
         raise ValueError(f"unknown metadata filter keys: {sorted(unknown)}")
-    if "ts_min" in meta and "ts_min_us" in meta:
-        raise ValueError("give ts_min or ts_min_us, not both")
-    if "ts_max" in meta and "ts_max_us" in meta:
-        raise ValueError("give ts_max or ts_max_us, not both")
+    # a None bound counts as absent (the reads below skip it), so it
+    # never conflicts with its other spelling
+    for bound in ("ts_min", "ts_max"):
+        if (meta.get(bound) is not None
+                and meta.get(f"{bound}_us") is not None):
+            raise ValueError(f"give {bound} or {bound}_us, not both")
     out: dict = {}
     role = meta.get("role")
     if role is not None:
@@ -173,19 +167,53 @@ def meta_mask_table(table, meta: dict) -> np.ndarray:
     return mask
 
 
-def meta_mask_from_docmap(docmap_path, meta: dict) -> np.ndarray:
-    """Load only the predicate's columns from one shard's docmap file
-    and compute its ordinal mask. Raises a descriptive error for
-    pre-metadata (docmap-v1) indexes."""
+def read_docmap_column(path, name: str):
+    """One column of a shard's docmap file as a single-chunk pyarrow
+    array (take() on a chunked column concatenates on every call), or
+    None when the file predates the column (docmap-v1)."""
     import pyarrow.parquet as pq
 
-    cols = needed_cols(meta)
-    pf = pq.ParquetFile(docmap_path)
-    have = set(pf.schema_arrow.names)
-    missing = [c for c in cols if c not in have]
-    if missing:
-        raise ValueError(
-            f"index docmap lacks metadata columns {missing} — built "
-            "before the docmap-v2 format; rebuild to serve "
-            "metadata-filtered queries")
-    return meta_mask_table(pf.read(columns=cols), meta)
+    pf = pq.ParquetFile(path)
+    if name not in pf.schema_arrow.names:
+        return None
+    return pf.read(columns=[name]).column(name).combine_chunks()
+
+
+def docmap_reader(path):
+    """Lazy, memoized column getter over one shard's docmap file."""
+    got: dict = {}
+
+    def col(name: str):
+        if name not in got:
+            got[name] = read_docmap_column(path, name)
+        return got[name]
+
+    return col
+
+
+def check_docmap_columns(index, need) -> None:
+    """Fail fast, before any shard runs, when a generation's docmap
+    lacks columns a request reads — an index built before the docmap-v2
+    format. One parquet footer per generation, memoized on the
+    searcher (``index._docmap_schema``): generations are frozen."""
+    import pyarrow.parquet as pq
+    from pathlib import Path
+
+    need = set(need) - {"doc_id"}
+    if not need:
+        return
+    for g in index.gens:
+        if not g["shards"]:
+            continue
+        have = index._docmap_schema.get(g["id"])
+        if have is None:
+            sh = int(g["shards"][0]["shard"])
+            path = Path(index.gdirs[g["id"]]) / index.docmap_files[(g["id"], sh)]
+            have = frozenset(pq.ParquetFile(path).schema_arrow.names)
+            index._docmap_schema[g["id"]] = have
+        missing = sorted(need - have)
+        if missing:
+            raise ValueError(
+                f"generation {g['id']} docmap lacks metadata columns "
+                f"{missing} — built before the docmap-v2 format; "
+                "rebuild to serve metadata-filtered queries")

@@ -25,8 +25,6 @@ Empty/unknown query terms short-circuit without launching a job
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
@@ -34,6 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geospatial_spark.functions.tokenize import tokenize_py
+from geospatial_spark.operators.boolquery import (Collapse, FacetCounts,
+                                                  MatchStats, TopK,
+                                                  bool_clauses, parse_bool,
+                                                  plan_bool, prune_bool)
 from geospatial_spark.operators.wand import wand_shard
 from geospatial_spark.plans import lifecycle as lc
 from geospatial_spark.plans.build import ORD_SHARD_SHIFT
@@ -115,6 +117,7 @@ class IndexSearcher:
         total_terms = sum(int(g.get("n_terms", 0)) for g in self.gens)
         self._dict_small = total_terms <= self.DICT_CACHE_MAX
         self._dict: dict[str, int] | None = None
+        self._docmap_schema: dict[str, frozenset] = {}  # gen → docmap columns
         # single-generation conveniences (used by tests/tools)
         self.gdir = lc.gen_dir(index_root, m["generation"])
 
@@ -179,16 +182,14 @@ class IndexSearcher:
     # kernel work for top-k queries; the distributed plan remains the
     # path for deep fetches (the adaptive-overfetch 0.0-plateau resolves
     # corpus-sized candidate sets executor-side) and federated roots.
-    LOCAL_SEARCH_MAX_K = int(os.environ.get(
-        "SPARK_GRAFT_LOCAL_SEARCH_MAX_K", "4096"))
+    LOCAL_SEARCH_MAX_K = 4096
     # positions bound: phrase/near queries decode the full position
     # streams of every doc containing ALL query terms — work the match
     # path's impact copies cannot cap. Beyond this estimated
     # co-occurrence count the single-coordinator decode loses to the
     # n_shards-way distributed kernels (measured 4.7x on a two-term
     # near query whose terms each cover >90% of the corpus).
-    LOCAL_SEARCH_MAX_COOC = int(os.environ.get(
-        "SPARK_GRAFT_LOCAL_SEARCH_MAX_COOC", "400000"))
+    LOCAL_SEARCH_MAX_COOC = 400_000
 
     def _cooc_est(self, df_global: dict, terms) -> float:
         """Expected docs containing ALL terms under independence:
@@ -217,8 +218,7 @@ class IndexSearcher:
     # an 8M-posting query on 8-32 cores, i.e. crossover ~5-6M): the
     # default caps the coordinator at ~1.5 s of worst-case cold decode,
     # and warm repeats are near-free (per-row impact memos).
-    LOCAL_SEARCH_MAX_POSTINGS = int(os.environ.get(
-        "SPARK_GRAFT_LOCAL_SEARCH_MAX_POSTINGS", "4000000"))
+    LOCAL_SEARCH_MAX_POSTINGS = 4_000_000
 
     def _match_local(self, k: int, df_global: dict):
         if (len(df_global) >= 2
@@ -340,17 +340,18 @@ class IndexSearcher:
         """Top-k (doc_id, score), exact BM25, rank/score-identical to the
         oracle; tie-break (conv_id, turn_idx) asc."""
         if meta is not None:
-            local = self._local_dispatch(k)
-        else:
-            norm = self.manifest.get("normalization") or {}
-            terms = sorted({norm.get(t, t) for t in tokenize_py(query)})
-            local = (self._match_local(k, self._df_for(terms))
-                     if terms and self.n_docs else None)
+            # a metadata-filtered match IS a scored should-OR under the
+            # mask (see search_df)
+            return self.search_bool(should=query, k=k, meta=meta,
+                                    quantized=quantized)
+        norm = self.manifest.get("normalization") or {}
+        terms = sorted({norm.get(t, t) for t in tokenize_py(query)})
+        local = (self._match_local(k, self._df_for(terms))
+                 if terms and self.n_docs else None)
         if local is not None:
             # list-shaped fast path: skip the DataFrame round-trip
-            return local.search(query, k=int(k), quantized=quantized,
-                                meta=meta)
-        df = self.search_df(query, k, quantized=quantized, meta=meta)
+            return local.search(query, k=int(k), quantized=quantized)
+        df = self.search_df(query, k, quantized=quantized)
         if df is None:
             return []
         return [(r["doc_id"], float(r["score"])) for r in df.collect()]
@@ -946,109 +947,18 @@ class IndexSearcher:
         boosts): score = Σ boost_t · BM25_t over present should terms;
         matching semantics (msm, filter context) are unaffected. Keys
         run through the same tokenizer/normalizer as the clauses."""
-        from geospatial_spark.operators.metafilter import normalize_meta
-
-        meta = normalize_meta(meta)
-        self._check_meta_support(meta)
-        norm = self.manifest.get("normalization") or {}
-
-        def toks(text: str) -> list[str]:
-            return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-        bst = None
-        if boosts:
-            bst = {}
-            for key, w in boosts.items():
-                for t in toks(str(key)):
-                    bst[t] = float(w)
-            bst = bst or None
-
-        sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
-        if self.n_docs == 0:
+        local, plan = self._bool_placed(
+            k, should, filter_q, must_not, meta=meta,
+            min_should_match=min_should_match, boosts=boosts,
+            quantized=quantized)
+        if plan is None:
             return None
-        msm = int(min_should_match)
-        if msm < 0:
-            raise ValueError("min_should_match must be >= 0")
-        # pure-NOT / match-all / metadata-only / optional-should: shards
-        # with ZERO matched segment rows still hold hits (every doc
-        # outside the must_not postings, every mask-passing doc, or
-        # every filter-context hit with no should term), so the kernel
-        # must run over a scaffold of ALL (gen, shard) pairs (driver
-        # metadata, bounded) instead of only the scanned groups
-        pure_not = (not sh or msm == 0) and not fl
-        df_global = self._df_for(sorted(set(sh + fl + mn)))
-        if any(t not in df_global for t in fl):
-            return None  # a filter term absent from the corpus ⇒ no hits
-        sh = [t for t in sh if t in df_global]
-        if should and not sh and msm > 0:
-            return None  # should clause given but no term exists
-        if sh and msm > len(sh):
-            # more required matches than live should terms (Lucene:
-            # minimumNumberShouldMatch above the optional-clause count
-            # matches nothing)
-            return None
-        mn = [t for t in mn if t in df_global]
-
-        local = self._local_dispatch(k)
         if local is not None:
             return self.spark.createDataFrame(
-                [(d, float(s)) for d, s in local.search_bool(
-                    should=should, filter_q=filter_q, must_not=must_not,
-                    k=int(k), meta=meta, quantized=quantized,
-                    min_should_match=min_should_match, boosts=boosts)],
+                [(d, float(s)) for d, s in local._bool_topk(plan, int(k))],
                 schema="doc_id string, score double")
-
-        scan_terms = sorted(set(sh + fl + mn))
-        matched = (self._segments().where(F.col("term").isin(scan_terms))
-                   .drop("pos_blocks", *_IMP_COLS))  # bool: doc ids only
-        if pure_not:
-            # complement path: left-join the (tiny) shard scaffold so
-            # every shard's group runs, matched rows or not
-            shards_df = self.spark.createDataFrame(
-                [(g, s) for (g, s) in sorted(self.shard_docs)],
-                "gen string, shard int")
-            matched = shards_df.join(matched, ["gen", "shard"], "left")
-        n_docs, avgdl = self.n_docs, self.avgdl
-        shard_docs, gdirs = self.shard_docs, self.gdirs
-        dm_files = self.docmap_files
-        kk = int(k)
-        qz = bool(quantized)
-
-        def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from pathlib import Path as _P
-
-            import pyarrow.parquet as pq
-
-            from geospatial_spark.operators.boolquery import bool_match_shard
-            from geospatial_spark.operators.metafilter import (
-                meta_mask_from_docmap,
-            )
-
-            gen, shard = str(key[0]), int(key[1])
-            base = shard << ORD_SHARD_SHIFT
-            rows_by_term = {rec["term"]: rec
-                            for rec in pdf.to_dict("records")
-                            if isinstance(rec.get("term"), str)}
-            amask = (meta_mask_from_docmap(
-                _P(gdirs[gen]) / dm_files[(gen, shard)], meta)
-                if meta is not None else None)
-            local, scores = bool_match_shard(
-                sh, fl, mn, rows_by_term, shard_docs.get((gen, shard), 0),
-                base, df_global, n_docs, avgdl, kk, allowed_init=amask,
-                quantize=qz, min_should_match=msm, boosts=bst)
-            if len(local) == 0:
-                return pd.DataFrame({"doc_id": pd.Series([], dtype=object),
-                                     "score": pd.Series([], dtype="float64")})
-            ids = pq.read_table(
-                _P(gdirs[gen]) / dm_files[(gen, shard)], columns=["doc_id"]
-            ).column("doc_id").take(local.tolist()).to_pylist()
-            return pd.DataFrame({"doc_id": ids,
-                                 "score": scores.astype(np.float64)})
-
-        per_shard = matched.groupBy("gen", "shard").applyInPandas(
-            run_shard, schema="doc_id string, score double"
-        )
-        return per_shard.orderBy(F.desc("score"), *merge_tie_break()).limit(kk)
+        return (self._bool_job(plan, TopK(k))
+                .orderBy(F.desc("score"), *merge_tie_break()).limit(int(k)))
 
     def search_bool(self, should: str = "", filter_q: str = "",
                     must_not: str = "", k: int = 10,
@@ -1057,19 +967,73 @@ class IndexSearcher:
                     min_should_match: int = 1,
                     boosts: dict[str, float] | None = None
                     ) -> list[tuple[str, float]]:
-        local = self._local_dispatch(k)
-        if local is not None:
-            return local.search_bool(
-                should=should, filter_q=filter_q, must_not=must_not,
-                k=int(k), meta=meta, quantized=quantized,
-                min_should_match=min_should_match, boosts=boosts)
-        df = self.search_bool_df(should, filter_q, must_not, k, meta=meta,
-                                 boosts=boosts,
-                                 quantized=quantized,
-                                 min_should_match=min_should_match)
-        if df is None:
+        local, plan = self._bool_placed(
+            k, should, filter_q, must_not, meta=meta,
+            min_should_match=min_should_match, boosts=boosts,
+            quantized=quantized)
+        if plan is None:
             return []
-        return [(r["doc_id"], float(r["score"])) for r in df.collect()]
+        if local is not None:
+            return local._bool_topk(plan, int(k))
+        rows = (self._bool_job(plan, TopK(k))
+                .orderBy(F.desc("score"), *merge_tie_break())
+                .limit(int(k)).collect())
+        return [(r["doc_id"], float(r["score"])) for r in rows]
+
+    # -- bool family: one plan, two placements -------------------------
+
+    def _bool_placed(self, k: int, should: str, filter_q: str,
+                     must_not: str, **kw):
+        """(placement, plan) of a bool-family request: the small-k
+        guard first, then the plan (operators/boolquery.plan_bool)
+        resolved once against the placed searcher's dictionary — a
+        local placement gets the plan and runs no Spark job."""
+        local = self._local_dispatch(k)
+        return local, plan_bool(local or self, should, filter_q, must_not,
+                                **kw)
+
+    def _shard_scaffold(self) -> DataFrame:
+        """Every (gen, shard) pair (driver metadata, bounded): the
+        left-join side that runs a kernel on shards with no matched
+        segment row (pure-NOT, match-all, metadata-only plans)."""
+        return self.spark.createDataFrame(sorted(self.shard_docs),
+                                          "gen string, shard int")
+
+    def _bool_job(self, plan, op) -> DataFrame:
+        """The distributed placement of a bool-family op: the plan's
+        term rows (doc streams only — no positions, no impact copies),
+        the shard scaffold when the plan is pure-NOT, and one
+        applyInPandas group per shard running the shared shard step
+        (operators/boolquery.bool_shard) against the shard's own docmap
+        file. Returns the op's per-shard partial rows; the caller's SQL
+        merge follows."""
+        matched = (self._segments()
+                   .where(F.col("term").isin(list(plan.scan_terms)))
+                   .drop("pos_blocks", *_IMP_COLS))
+        if plan.pure_not:
+            matched = self._shard_scaffold().join(matched, ["gen", "shard"],
+                                                  "left")
+        shard_docs, gdirs = self.shard_docs, self.gdirs
+        dm_files = self.docmap_files
+
+        def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            from geospatial_spark.operators.boolquery import bool_shard
+            from geospatial_spark.operators.metafilter import docmap_reader
+
+            gen, shard = str(key[0]), int(key[1])
+            rows_by_term = {rec["term"]: rec
+                            for rec in pdf.to_dict("records")
+                            if isinstance(rec.get("term"), str)}
+            part = bool_shard(
+                plan, op, rows_by_term, shard_docs.get((gen, shard), 0),
+                shard << ORD_SHARD_SHIFT,
+                docmap_reader(f"{gdirs[gen]}/{dm_files[(gen, shard)]}"))
+            return pd.DataFrame({c: pd.Series([] if part is None else part[c],
+                                              dtype=t)
+                                 for c, t in op.dtypes.items()})
+
+        return matched.groupBy("gen", "shard").applyInPandas(
+            run_shard, schema=op.schema)
 
     # -- expansion queries (prefix / fuzzy rewrite) --------------------
 
@@ -1271,34 +1235,6 @@ class IndexSearcher:
                     "quantized": quant}
         return {"type": "match", "q": q, "quantized": quant}
 
-    def _check_meta_support(self, meta: dict | None) -> None:
-        """Fail fast (driver-side, one parquet footer per generation)
-        when a metadata predicate targets docmap columns an old-format
-        index lacks — clearer than per-task executor errors."""
-        if meta is None:
-            return
-        from pathlib import Path as _P
-
-        from geospatial_spark.operators import metafilter as mf
-
-        need = set(mf.needed_cols(meta)) - {"doc_id"}
-        if not need:
-            return
-        import pyarrow.parquet as pq
-
-        for g in self.gens:
-            if not g["shards"]:
-                continue
-            sh = int(g["shards"][0]["shard"])
-            path = _P(self.gdirs[g["id"]]) / self.docmap_files[(g["id"], sh)]
-            names = set(pq.ParquetFile(path).schema_arrow.names)
-            missing = sorted(need - names)
-            if missing:
-                raise ValueError(
-                    f"generation {g['id']} docmap lacks metadata columns "
-                    f"{missing} — built before the docmap-v2 format; "
-                    "rebuild to serve metadata-filtered queries")
-
     def facet_counts_df(self, should: str = "", filter_q: str = "",
                         must_not: str = "", meta: dict | None = None,
                         field: str = "role") -> DataFrame | None:
@@ -1310,97 +1246,21 @@ class IndexSearcher:
         DataFrame (facet string, n long); NULL field values are
         excluded (the missing bucket).
 
-        Scale shape: each (gen, shard) kernel resolves its FULL local
-        match set (bool semantics incl. meta mask), maps ordinals to
-        the facet column of its own docmap (local file, no shuffle),
-        and emits ≤ |distinct values| rows; the driver-side agg sums
-        tiny per-shard partials. No per-doc row ever leaves the
-        kernel."""
-        from geospatial_spark.operators.metafilter import (FACET_FIELDS,
-                                                           normalize_meta)
-
-        if field not in FACET_FIELDS:
-            raise ValueError(f"unsupported facet field {field!r} "
-                             "(docmap metadata fields / time buckets "
-                             f"only: {FACET_FIELDS})")
-        meta = normalize_meta(meta)
-        self._check_meta_support(meta)
-        self._check_meta_support({"role": ["x"]})  # field itself needs v2
-        norm = self.manifest.get("normalization") or {}
-
-        def toks(text: str) -> list[str]:
-            return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-        sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
-        if self.n_docs == 0:
+        Scale shape: each shard step resolves its FULL local match set
+        (bool semantics incl. meta mask) and folds it against its own
+        docmap column into ≤ |distinct values| rows
+        (operators/boolquery.FacetCounts); the merge sums those tiny
+        partials. No per-doc row ever leaves the shard."""
+        op = FacetCounts(field)
+        local, plan = self._bool_placed(0, should, filter_q, must_not,
+                                        meta=meta, need=op.cols)
+        if plan is None:
             return None
-        pure_not = not sh and not fl
-        df_global = self._df_for(sorted(set(sh + fl + mn)))
-        if any(t not in df_global for t in fl):
-            return None
-        sh = [t for t in sh if t in df_global]
-        if should and not sh:
-            return None
-        mn = [t for t in mn if t in df_global]
-
-        local = self._local_dispatch(0)
         if local is not None:
-            counts = local.facet_counts(should=should, filter_q=filter_q,
-                                        must_not=must_not, meta=meta,
-                                        field=field)
-            rows = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-            return self.spark.createDataFrame(
-                [(f, int(n)) for f, n in rows], schema="facet string, n long")
-
-        scan_terms = sorted(set(sh + fl + mn))
-        matched = (self._segments().where(F.col("term").isin(scan_terms))
-                   .drop("pos_blocks", *_IMP_COLS))
-        if pure_not:
-            shards_df = self.spark.createDataFrame(
-                [(g, s) for (g, s) in sorted(self.shard_docs)],
-                "gen string, shard int")
-            matched = shards_df.join(matched, ["gen", "shard"], "left")
-        n_docs, avgdl = self.n_docs, self.avgdl
-        shard_docs, gdirs = self.shard_docs, self.gdirs
-        dm_files = self.docmap_files
-        fld = field
-
-        def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from pathlib import Path as _P
-
-            import pyarrow.parquet as pq
-
-            from geospatial_spark.operators.boolquery import bool_match_shard
-            from geospatial_spark.operators.metafilter import (
-                meta_mask_from_docmap,
-            )
-
-            gen, shard = str(key[0]), int(key[1])
-            base = shard << ORD_SHARD_SHIFT
-            n_local = shard_docs.get((gen, shard), 0)
-            rows_by_term = {rec["term"]: rec
-                            for rec in pdf.to_dict("records")
-                            if isinstance(rec.get("term"), str)}
-            dm_path = _P(gdirs[gen]) / dm_files[(gen, shard)]
-            amask = (meta_mask_from_docmap(dm_path, meta)
-                     if meta is not None else None)
-            # k = n_local: facets aggregate the FULL match set
-            local, _scores = bool_match_shard(
-                sh, fl, mn, rows_by_term, n_local, base, df_global,
-                n_docs, avgdl, max(n_local, 1), allowed_init=amask)
-            if len(local) == 0:
-                return pd.DataFrame({"facet": pd.Series([], dtype=object),
-                                     "n": pd.Series([], dtype="int64")})
-            from geospatial_spark.operators.metafilter import facet_values
-
-            vals = pd.Series(facet_values(dm_path, fld, local.tolist()))
-            counts = vals.dropna().value_counts()
-            return pd.DataFrame({"facet": counts.index.astype(object),
-                                 "n": counts.to_numpy(dtype="int64")})
-
-        per_shard = matched.groupBy("gen", "shard").applyInPandas(
-            run_shard, schema="facet string, n long")
-        return (per_shard.groupBy("facet")
+            rows = sorted(local._facet_counts(plan, op).items(),
+                          key=lambda kv: (-kv[1], kv[0]))
+            return self.spark.createDataFrame(rows, "facet string, n long")
+        return (self._bool_job(plan, op).groupBy("facet")
                 .agg(F.sum("n").cast("long").alias("n"))
                 .orderBy(F.desc("n"), F.asc("facet")))
 
@@ -1410,108 +1270,22 @@ class IndexSearcher:
         """Metric aggregation over a query's FULL match set (the
         stats/min/max-agg-inside-a-query-context shape): one row
         (n_matched, sum_dl, min_ts_us, max_ts_us) — dl and ts from each
-        shard's own docmap. Same kernel plan as facet_counts_df: the
-        per-shard kernel resolves its local match set, folds it to ONE
-        partial row against local docmap columns, and the driver-side
-        agg combines shard partials (count/sum/min/max are all
-        associative). ts nulls are excluded from min/max (SQL
-        semantics); None = structurally empty query."""
-        from geospatial_spark.operators.metafilter import normalize_meta
-
-        meta = normalize_meta(meta)
-        self._check_meta_support(meta)
-        norm = self.manifest.get("normalization") or {}
-
-        def toks(text: str) -> list[str]:
-            return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-        sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
-        if self.n_docs == 0:
+        shard's own docmap. Each shard step folds its local match set
+        to ONE partial row (operators/boolquery.MatchStats) and the
+        merge combines them (count/sum/min/max are all associative).
+        ts nulls are excluded from min/max (SQL semantics), an empty
+        match set sums to NULL; None = structurally empty query."""
+        local, plan = self._bool_placed(0, should, filter_q, must_not,
+                                        meta=meta)
+        if plan is None:
             return None
-        pure_not = not sh and not fl
-        df_global = self._df_for(sorted(set(sh + fl + mn)))
-        if any(t not in df_global for t in fl):
-            return None
-        sh = [t for t in sh if t in df_global]
-        if should and not sh:
-            return None
-        mn = [t for t in mn if t in df_global]
-
-        local = self._local_dispatch(0)
         if local is not None:
-            st = local.match_stats(should=should, filter_q=filter_q,
-                                   must_not=must_not, meta=meta)
+            cols = ("n_matched", "sum_dl", "min_ts_us", "max_ts_us")
+            st = local._match_stats(plan)
             return self.spark.createDataFrame(
-                [(int(st["n_matched"]),
-                  None if st["sum_dl"] is None else int(st["sum_dl"]),
-                  None if st["min_ts_us"] is None else int(st["min_ts_us"]),
-                  None if st["max_ts_us"] is None else int(st["max_ts_us"]))],
-                schema="n_matched long, sum_dl long, "
-                       "min_ts_us long, max_ts_us long")
-
-        scan_terms = sorted(set(sh + fl + mn))
-        matched = (self._segments().where(F.col("term").isin(scan_terms))
-                   .drop("pos_blocks", *_IMP_COLS))
-        if pure_not:
-            shards_df = self.spark.createDataFrame(
-                [(g, s) for (g, s) in sorted(self.shard_docs)],
-                "gen string, shard int")
-            matched = shards_df.join(matched, ["gen", "shard"], "left")
-        n_docs, avgdl = self.n_docs, self.avgdl
-        shard_docs, gdirs = self.shard_docs, self.gdirs
-        dm_files = self.docmap_files
-
-        def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from pathlib import Path as _P
-
-            import pyarrow.parquet as pq
-
-            from geospatial_spark.operators.boolquery import bool_match_shard
-            from geospatial_spark.operators.metafilter import (
-                meta_mask_from_docmap,
-            )
-
-            gen, shard = str(key[0]), int(key[1])
-            base = shard << ORD_SHARD_SHIFT
-            n_local = shard_docs.get((gen, shard), 0)
-            rows_by_term = {rec["term"]: rec
-                            for rec in pdf.to_dict("records")
-                            if isinstance(rec.get("term"), str)}
-            dm_path = _P(gdirs[gen]) / dm_files[(gen, shard)]
-            amask = (meta_mask_from_docmap(dm_path, meta)
-                     if meta is not None else None)
-            local, _sc = bool_match_shard(
-                sh, fl, mn, rows_by_term, n_local, base, df_global,
-                n_docs, avgdl, max(n_local, 1), allowed_init=amask)
-            empty = pd.DataFrame(
-                {"n": pd.Series([], dtype="int64"),
-                 "sum_dl": pd.Series([], dtype="int64"),
-                 "min_ts": pd.Series([], dtype="Int64"),
-                 "max_ts": pd.Series([], dtype="Int64")})
-            if len(local) == 0:
-                return empty
-            pf = pq.ParquetFile(dm_path)
-            names = pf.schema_arrow.names
-            dm = pf.read(columns=["dl"] + (["ts_us"] if "ts_us" in names
-                                           else []))  # never doc_id strings
-            idx = local.tolist()
-            dls = dm.column("dl").take(idx).to_numpy(zero_copy_only=False)
-            if "ts_us" in dm.column_names:
-                ts = pd.array(
-                    dm.column("ts_us").take(idx).to_pylist(), dtype="Int64")
-            else:
-                ts = pd.array([None] * len(idx), dtype="Int64")
-            tmin, tmax = ts.min(), ts.max()
-            return pd.DataFrame(
-                {"n": [len(idx)],
-                 "sum_dl": [int(dls.sum())],
-                 "min_ts": pd.array([tmin], dtype="Int64"),
-                 "max_ts": pd.array([tmax], dtype="Int64")})
-
-        per_shard = matched.groupBy("gen", "shard").applyInPandas(
-            run_shard,
-            schema="n long, sum_dl long, min_ts long, max_ts long")
-        return per_shard.agg(
+                [tuple(st[c] for c in cols)],
+                ", ".join(f"{c} long" for c in cols))
+        return self._bool_job(plan, MatchStats()).agg(
             F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_matched"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
             F.min("min_ts").cast("long").alias("min_ts_us"),
@@ -1538,115 +1312,30 @@ class IndexSearcher:
         (round(score, ORDER_DP) desc, doc_id asc); NULL field values
         are dropped (the missing bucket, same as facets).
 
-        Scale shape: the per-shard kernel resolves its FULL local match
-        set (collapse must see every match — a shard's 11th-best can be
-        a rare value's best), maps ordinals to its own docmap column
-        (local file, no shuffle), and emits ONE row per distinct value;
-        the global reduce is a window over tiny per-shard partials."""
+        Scale shape: each shard step resolves its FULL local match set
+        (collapse must see every match — a shard's 11th-best can be a
+        rare value's best) and keeps ONE row per distinct value
+        (operators/boolquery.Collapse); the global reduce is a window
+        over those tiny partials."""
         from pyspark.sql import Window
 
         from geospatial_spark.functions.oracle_sql import ORDER_DP
-        from geospatial_spark.operators.metafilter import normalize_meta
 
-        if field not in ("role",):
-            raise ValueError(f"unsupported collapse field {field!r} "
-                             "(docmap metadata fields only)")
-        meta = normalize_meta(meta)
-        self._check_meta_support(meta)
-        self._check_meta_support({"role": ["x"]})  # field itself needs v2
-        norm = self.manifest.get("normalization") or {}
-
-        def toks(text: str) -> list[str]:
-            return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-        sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
-        if self.n_docs == 0:
+        op = Collapse(field)
+        local, plan = self._bool_placed(k, should, filter_q, must_not,
+                                        meta=meta, need=op.cols)
+        if plan is None:
             return None
-        pure_not = not sh and not fl
-        df_global = self._df_for(sorted(set(sh + fl + mn)))
-        if any(t not in df_global for t in fl):
-            return None
-        sh = [t for t in sh if t in df_global]
-        if should and not sh:
-            return None
-        mn = [t for t in mn if t in df_global]
-
-        local = self._local_dispatch(k)
         if local is not None:
             return self.spark.createDataFrame(
-                [(c, d, float(s)) for c, d, s in local.search_collapsed(
-                    should=should, filter_q=filter_q, must_not=must_not,
-                    k=int(k), meta=meta, field=field)],
+                local._collapse(plan, op, int(k)),
                 schema="collapse string, doc_id string, score double")
-
-        scan_terms = sorted(set(sh + fl + mn))
-        matched = (self._segments().where(F.col("term").isin(scan_terms))
-                   .drop("pos_blocks", *_IMP_COLS))
-        if pure_not:
-            shards_df = self.spark.createDataFrame(
-                [(g, s) for (g, s) in sorted(self.shard_docs)],
-                "gen string, shard int")
-            matched = shards_df.join(matched, ["gen", "shard"], "left")
-        n_docs, avgdl = self.n_docs, self.avgdl
-        shard_docs, gdirs = self.shard_docs, self.gdirs
-        dm_files = self.docmap_files
-        fld = field
-        odp = ORDER_DP
-
-        def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from pathlib import Path as _P
-
-            import pyarrow.parquet as pq
-
-            from geospatial_spark.operators.boolquery import bool_match_shard
-            from geospatial_spark.operators.metafilter import (
-                meta_mask_from_docmap,
-            )
-
-            empty = pd.DataFrame({"collapse": pd.Series([], dtype=object),
-                                  "doc_id": pd.Series([], dtype=object),
-                                  "score": pd.Series([], dtype="float64")})
-            gen, shard = str(key[0]), int(key[1])
-            base = shard << ORD_SHARD_SHIFT
-            n_local = shard_docs.get((gen, shard), 0)
-            rows_by_term = {rec["term"]: rec
-                            for rec in pdf.to_dict("records")
-                            if isinstance(rec.get("term"), str)}
-            dm_path = _P(gdirs[gen]) / dm_files[(gen, shard)]
-            amask = (meta_mask_from_docmap(dm_path, meta)
-                     if meta is not None else None)
-            # k = n_local: collapse must see the FULL match set
-            local, scores = bool_match_shard(
-                sh, fl, mn, rows_by_term, n_local, base, df_global,
-                n_docs, avgdl, max(n_local, 1), allowed_init=amask)
-            if len(local) == 0:
-                return empty
-            tbl = pq.read_table(dm_path, columns=[fld, "doc_id"])
-            vals = tbl.column(fld).take(local.tolist()).to_pandas()
-            ids = tbl.column("doc_id").take(local.tolist()).to_pandas()
-            part = pd.DataFrame({"collapse": vals, "doc_id": ids,
-                                 "score": scores.astype(np.float64)})
-            part = part.dropna(subset=["collapse"])
-            if part.empty:
-                return empty
-            # local best per value under the rounded contract
-            part["r"] = part["score"].round(odp)
-            part = (part.sort_values(["collapse", "r", "doc_id"],
-                                     ascending=[True, False, True])
-                    .drop_duplicates("collapse", keep="first")
-                    .drop(columns="r"))
-            return part
-
-        per_shard = matched.groupBy("gen", "shard").applyInPandas(
-            run_shard, schema="collapse string, doc_id string, score double"
-        )
-        rn = F.row_number().over(
-            Window.partitionBy("collapse")
-            .orderBy(F.round(F.col("score"), odp).desc(), F.asc("doc_id")))
-        return (per_shard.withColumn("rn", rn).where(F.col("rn") == 1)
-                .drop("rn")
-                .orderBy(F.round(F.col("score"), odp).desc(),
-                         F.asc("doc_id"))
+        rounded = F.round(F.col("score"), ORDER_DP)
+        rn = F.row_number().over(Window.partitionBy("collapse")
+                                 .orderBy(rounded.desc(), F.asc("doc_id")))
+        return (self._bool_job(plan, op).withColumn("rn", rn)
+                .where(F.col("rn") == 1).drop("rn")
+                .orderBy(rounded.desc(), F.asc("doc_id"))
                 .limit(int(k)))
 
     def search_collapsed(self, should: str = "", filter_q: str = "",
@@ -1838,23 +1527,9 @@ class IndexSearcher:
                         spec.get("q", ""), int(spec.get("slop", 0)),
                         int(k))
                 elif typ == "bool":
-                    msm_l = int(spec.get("minimum_should_match", 1))
-                    if msm_l < 0:
-                        raise ValueError(
-                            f"minimum_should_match must be >= 0 for {qid!r}")
-                    from geospatial_spark.operators.metafilter import (
-                        normalize_meta,
-                    )
-
-                    self._check_meta_support(normalize_meta(spec.get("meta")))
-                    out_l[qid] = local.search_bool(
-                        should=spec.get("should", ""),
-                        filter_q=spec.get("filter", ""),
-                        must_not=spec.get("must_not", ""), k=int(k),
-                        meta=spec.get("meta"),
-                        quantized=bool(spec.get("quantized", False)),
-                        min_should_match=msm_l,
-                        boosts=spec.get("boosts") or None)
+                    plan = plan_bool(local, **bool_clauses(spec))
+                    out_l[qid] = ([] if plan is None
+                                  else local._bool_topk(plan, int(k)))
                 else:
                     raise ValueError(
                         f"unknown query type {typ!r} for {qid!r}")
@@ -1896,26 +1571,8 @@ class IndexSearcher:
                 p = {"type": typ, "terms": ts,
                      "slop": int(spec.get("slop", 0))}
             elif typ == "bool":
-                from geospatial_spark.operators.metafilter import (
-                    normalize_meta,
-                )
-
-                p = {"type": typ,
-                     "should": toks_set(spec.get("should", "")),
-                     "filter": toks_set(spec.get("filter", "")),
-                     "must_not": toks_set(spec.get("must_not", "")),
-                     "meta": normalize_meta(spec.get("meta")),
-                     "quantized": bool(spec.get("quantized", False)),
-                     "msm": int(spec.get("minimum_should_match", 1))}
-                if p["msm"] < 0:
-                    raise ValueError(
-                        f"minimum_should_match must be >= 0 for {qid!r}")
-                raw_boosts = spec.get("boosts") or {}
-                p["boosts"] = {t: float(w) for key, w in raw_boosts.items()
-                               for t in toks_set(str(key))} or None
-                self._check_meta_support(p["meta"])
-                p["terms"] = sorted(set(p["should"] + p["filter"]
-                                        + p["must_not"]))
+                bq = parse_bool(self, **bool_clauses(spec))
+                p = {"type": typ, "query": bq, "terms": bq.terms}
             else:
                 raise ValueError(f"unknown query type {typ!r} for {qid!r}")
             plans[qid] = p
@@ -1934,13 +1591,8 @@ class IndexSearcher:
                 ok = bool(p["terms"]) and all(x in df_global
                                               for x in p["terms"])
             else:
-                p["should"] = [x for x in p["should"] if x in df_global]
-                p["must_not"] = [x for x in p["must_not"] if x in df_global]
-                ok = all(x in df_global for x in p["filter"])
-                if ok and queries[qid].get("should") and p["msm"] > 0:
-                    # a required-should clause with too few live terms
-                    # can never match (Lucene msm-above-count rule)
-                    ok = bool(p["should"]) and p["msm"] <= len(p["should"])
+                p["plan"] = prune_bool(p["query"], df_global)
+                ok = p["plan"] is not None
             if ok:
                 live[qid] = p
         if not live:
@@ -1948,9 +1600,8 @@ class IndexSearcher:
         # any pure-NOT (or metadata-only / optional-should) bool in the
         # batch forces the shard scaffold: its hits live in shards with
         # zero matched segment rows
-        any_pure_not = any(p["type"] == "bool"
-                           and (not p["should"] or p.get("msm", 1) == 0)
-                           and not p["filter"] for p in live.values())
+        any_pure_not = any(p["type"] == "bool" and p["plan"].pure_not
+                           for p in live.values())
 
         scan_terms = sorted({t for p in live.values() for t in p["terms"]
                              if t in df_global})
@@ -1958,21 +1609,16 @@ class IndexSearcher:
         if not needs_pos:
             matched = matched.drop("pos_blocks")
         if any_pure_not:
-            shards_df = self.spark.createDataFrame(
-                [(g, s) for (g, s) in sorted(self.shard_docs)],
-                "gen string, shard int")
-            matched = shards_df.join(matched, ["gen", "shard"], "left")
+            matched = self._shard_scaffold().join(matched, ["gen", "shard"],
+                                                  "left")
         n_docs, avgdl = self.n_docs, self.avgdl
         shard_docs, gdirs = self.shard_docs, self.gdirs
         dm_files = self.docmap_files
         kk = int(k)
 
         def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from pathlib import Path as _P
-
-            import pyarrow.parquet as pq
-
-            from geospatial_spark.operators.boolquery import bool_match_shard
+            from geospatial_spark.operators.boolquery import TopK, bool_shard
+            from geospatial_spark.operators.metafilter import docmap_reader
             from geospatial_spark.operators.phrase import (
                 near_match_shard,
                 phrase_match_shard,
@@ -1985,7 +1631,7 @@ class IndexSearcher:
             rows_by_term = {rec["term"]: rec
                             for rec in pdf.to_dict("records")
                             if isinstance(rec.get("term"), str)}
-            docmap_col = None
+            col = docmap_reader(f"{gdirs[gen]}/{dm_files[(gen, shard)]}")
             outs = []
             for qid, p in live.items():
                 t = p["type"]
@@ -2014,29 +1660,15 @@ class IndexSearcher:
                         p["terms"], p["slop"], rows_by_term, base,
                         df_global, n_docs, avgdl, kk)
                 else:
-                    amask = None
-                    if p.get("meta") is not None:
-                        from geospatial_spark.operators.metafilter import (
-                            meta_mask_from_docmap,
-                        )
-
-                        amask = meta_mask_from_docmap(
-                            _P(gdirs[gen]) / dm_files[(gen, shard)],
-                            p["meta"])
-                    local, scores = bool_match_shard(
-                        p["should"], p["filter"], p["must_not"],
-                        rows_by_term, n_local, base, df_global,
-                        n_docs, avgdl, kk, allowed_init=amask,
-                        quantize=p.get("quantized", False),
-                        min_should_match=p.get("msm", 1),
-                        boosts=p.get("boosts"))
-                if len(local) == 0:
-                    continue
-                if docmap_col is None:
-                    docmap_col = pq.read_table(
-                        _P(gdirs[gen]) / dm_files[(gen, shard)],
-                        columns=["doc_id"]).column("doc_id")
-                ids = docmap_col.take(local.tolist()).to_pylist()
+                    part = bool_shard(p["plan"], TopK(kk), rows_by_term,
+                                      n_local, base, col)
+                    if part is None:
+                        continue
+                    ids, scores = part["doc_id"], part["score"]
+                if t != "bool":
+                    if len(local) == 0:
+                        continue
+                    ids = col("doc_id").take(local).to_pylist()
                 outs.append(pd.DataFrame({
                     "qid": qid, "gen": gen,
                     "shard": np.full(len(ids), shard, dtype=np.int32),

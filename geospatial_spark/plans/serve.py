@@ -11,7 +11,11 @@ query's terms — I/O stays ∝ matched postings even for a huge index (on
 object stores these are range reads).
 
 Exactness contract is identical to plans/query.IndexSearcher: same
-segments, same wand_shard kernel, same stats, same tie-break.
+segments, same wand_shard kernel, same stats, same tie-break. The bool
+family (search_bool, facet_counts, match_stats, search_collapsed) shares
+more than the kernel: both searchers run the same plan and per-shard
+step (operators/boolquery.py); only the shard loop and the final merge
+here are serving-specific.
 The batch engine (IndexSearcher) remains the path for query WORKLOADS
 (search_many fan-out across executors); LocalSearcher is the
 interactive/serving path.
@@ -19,11 +23,17 @@ interactive/serving path.
 
 from __future__ import annotations
 
+import functools
 from pathlib import Path
 
 import numpy as np
 
 from geospatial_spark.functions.tokenize import tokenize_py
+from geospatial_spark.operators.boolquery import (Collapse, FacetCounts,
+                                                  MatchStats, TopK,
+                                                  best_per_value, bool_shard,
+                                                  plan_bool)
+from geospatial_spark.operators.metafilter import read_docmap_column
 from geospatial_spark.operators.wand import wand_shard
 from geospatial_spark.plans import lifecycle as lc
 from geospatial_spark.plans.build import ORD_SHARD_SHIFT
@@ -90,7 +100,9 @@ class LocalSearcher:
         self._imp_terms: dict[str, set] = {}  # gen -> terms with impact copies
         self._seg_ds = None  # lazy pyarrow dataset over all generations
         self._readers: dict[str, _SegmentReader] = {}
-        self._docmap_cache: dict[tuple[str, int], object] = {}  # frozen index → safe
+        # (gen, shard, column) → docmap column; frozen index → safe
+        self._docmap_cache: dict[tuple[str, int, str], object] = {}
+        self._docmap_schema: dict[str, frozenset] = {}  # gen → docmap columns
         # term-row LRU: (gen, term, read-class) → segment rows; see
         # search() — the always-on serving process's hot cache
         from collections import OrderedDict
@@ -118,23 +130,12 @@ class LocalSearcher:
         self._dict_small = (
             sum(int(g.get("n_terms", 0)) for g in self.gens)
             <= self.DICT_CACHE_MAX)
-        # (gen, shard, cols) → docmap metadata columns (metafilter path)
-        self._meta_col_cache: dict[tuple, object] = {}
         self._ts_cache: dict[str, int | None] | None = None  # decay path
         self._kernel_pool = None  # lazy ThreadPoolExecutor (see _pool)
         if preload_docmaps:
-            import pyarrow.parquet as pq
-
             for g in self.gens:
                 for s in g["shards"]:
-                    shard = int(s["shard"])
-                    # combine_chunks: take() on a multi-chunk column
-                    # concatenates internally on EVERY call (measured
-                    # ~5 ms per query at 550k docs); combined once, a
-                    # 10-element take is microseconds
-                    self._docmap_cache[(g["id"], shard)] = pq.read_table(
-                        self.gdirs[g["id"]] / self.docmap_files[(g["id"], shard)],
-                        columns=["doc_id"]).column("doc_id").combine_chunks()
+                    self._docmap_column(g["id"], int(s["shard"]), "doc_id")
 
     # -- dictionary (loaded once; the frozen index makes this sound) ---
 
@@ -557,8 +558,6 @@ class LocalSearcher:
                quantized: bool = False,
                meta: dict | None = None,
                terms: list[str] | None = None) -> list[tuple[str, float]]:
-        import pyarrow.parquet as pq
-
         if meta is not None:
             if terms is not None:
                 raise ValueError(
@@ -585,7 +584,6 @@ class LocalSearcher:
         candidates: list[tuple[float, str, int, str]] = []  # (-score, conv, turn, doc_id)
         for g in self.gens:
             gen_id = g["id"]
-            gdir = self.gdirs[gen_id]
             reader = self._reader(gen_id)
             names = reader.schema_names
             imp_set = self._imp_for(gen_id)
@@ -652,13 +650,7 @@ class LocalSearcher:
                 )
                 if len(local) == 0:
                     return []
-                key = (gen_id, shard)
-                col = self._docmap_cache.get(key)
-                if col is None:
-                    col = pq.read_table(
-                        gdir / self.docmap_files[(gen_id, shard)],
-                        columns=["doc_id"]).column("doc_id").combine_chunks()
-                    self._docmap_cache[key] = col
+                col = self._docmap_column(gen_id, shard, "doc_id")
                 ids = col.take(local.tolist()).to_pylist()
                 return list(zip(ids, scores))
 
@@ -688,7 +680,6 @@ class LocalSearcher:
         position intersection + distinct-term BM25 scoring local.
         Returns (doc_id, score, phrase_tf) — the full column set of
         IndexSearcher.search_phrase_df."""
-        import pyarrow.parquet as pq
 
         from geospatial_spark.operators.phrase import phrase_match_shard
 
@@ -707,7 +698,6 @@ class LocalSearcher:
         candidates: list[tuple[float, str, int, str]] = []
         for g in self.gens:
             gen_id = g["id"]
-            gdir = self.gdirs[gen_id]
             reader = self._reader(gen_id)
             cols = [c for c in reader.schema_names
                     if not c.startswith("imp_")]  # phrase never uses impact copies
@@ -722,13 +712,7 @@ class LocalSearcher:
                     self.n_docs, self.avgdl, k)
                 if len(local) == 0:
                     continue
-                key = (gen_id, shard)
-                col = self._docmap_cache.get(key)
-                if col is None:
-                    col = pq.read_table(
-                        gdir / self.docmap_files[key],
-                        columns=["doc_id"]).column("doc_id").combine_chunks()
-                    self._docmap_cache[key] = col
+                col = self._docmap_column(gen_id, shard, "doc_id")
                 for doc_id, sc, tf in zip(col.take(local.tolist()).to_pylist(),
                                           scores, ptf):
                     conv, _, turn = doc_id.rpartition(":")
@@ -745,7 +729,6 @@ class LocalSearcher:
         against the dictionary, fixed-tokens-then-any-variant adjacency,
         per-doc MAX over variant phrase scores
         (operators/phrase.phrase_prefix_match_shard)."""
-        import pyarrow.parquet as pq
 
         from geospatial_spark.operators.phrase import (
             phrase_prefix_match_shard,
@@ -770,7 +753,6 @@ class LocalSearcher:
         candidates: list[tuple[float, str, int, str]] = []
         for g in self.gens:
             gen_id = g["id"]
-            gdir = self.gdirs[gen_id]
             reader = self._reader(gen_id)
             cols = [c for c in reader.schema_names
                     if not c.startswith("imp_")]
@@ -785,13 +767,7 @@ class LocalSearcher:
                     self.n_docs, self.avgdl, k)
                 if len(local) == 0:
                     continue
-                key = (gen_id, shard)
-                col = self._docmap_cache.get(key)
-                if col is None:
-                    col = pq.read_table(
-                        gdir / self.docmap_files[key],
-                        columns=["doc_id"]).column("doc_id").combine_chunks()
-                    self._docmap_cache[key] = col
+                col = self._docmap_column(gen_id, shard, "doc_id")
                 for doc_id, sc in zip(col.take(local.tolist()).to_pylist(),
                                       scores):
                     conv, _, turn = doc_id.rpartition(":")
@@ -806,7 +782,6 @@ class LocalSearcher:
         df (sum of per-shard match counts), tf = occurrence count.
         Per-shard top-k by the idf-less saturation term is already in
         final-score order (idf is a constant positive factor)."""
-        import pyarrow.parquet as pq
 
         from geospatial_spark.functions.bm25 import idf as _idf
         from geospatial_spark.operators.phrase import (
@@ -828,7 +803,6 @@ class LocalSearcher:
         hits: list[tuple[float, str, int, str]] = []  # (sat, conv, turn, id)
         for g in self.gens:
             gen_id = g["id"]
-            gdir = self.gdirs[gen_id]
             reader = self._reader(gen_id)
             cols = [c for c in reader.schema_names
                     if not c.startswith("imp_")]
@@ -843,13 +817,7 @@ class LocalSearcher:
                 phrase_df += n_matched
                 if len(local) == 0:
                     continue
-                key = (gen_id, shard)
-                col = self._docmap_cache.get(key)
-                if col is None:
-                    col = pq.read_table(
-                        gdir / self.docmap_files[key],
-                        columns=["doc_id"]).column("doc_id").combine_chunks()
-                    self._docmap_cache[key] = col
+                col = self._docmap_column(gen_id, shard, "doc_id")
                 for doc_id, s in zip(col.take(local.tolist()).to_pylist(),
                                      sat):
                     conv, _, turn = doc_id.rpartition(":")
@@ -869,7 +837,6 @@ class LocalSearcher:
         """Proximity top-k on the serving path — same contract as
         IndexSearcher.search_near. Returns (doc_id, score, min_span),
         the full column set of IndexSearcher.search_near_df."""
-        import pyarrow.parquet as pq
 
         from geospatial_spark.operators.phrase import near_match_shard
 
@@ -887,7 +854,6 @@ class LocalSearcher:
         candidates: list[tuple[float, str, int, str]] = []
         for g in self.gens:
             gen_id = g["id"]
-            gdir = self.gdirs[gen_id]
             reader = self._reader(gen_id)
             cols = [c for c in reader.schema_names
                     if not c.startswith("imp_")]
@@ -901,12 +867,7 @@ class LocalSearcher:
                     self.n_docs, self.avgdl, k)
                 if len(local) == 0:
                     continue
-                key = (gen_id, shard)
-                col = self._docmap_cache.get(key)
-                if col is None:
-                    col = pq.read_table(gdir / self.docmap_files[key],
-                                        columns=["doc_id"]).column("doc_id").combine_chunks()
-                    self._docmap_cache[key] = col
+                col = self._docmap_column(gen_id, shard, "doc_id")
                 for doc_id, sc, sp in zip(col.take(local.tolist()).to_pylist(),
                                           scores, spans):
                     conv, _, turn = doc_id.rpartition(":")
@@ -915,127 +876,126 @@ class LocalSearcher:
         candidates.sort()
         return [(d, -neg, sp) for neg, _, _, d, sp in candidates[:k]]
 
-    def _meta_mask(self, gen_id: str, shard: int, meta: dict):
-        """Per-shard ordinal mask for a normalized metadata predicate;
-        the needed docmap columns are cached per (gen, shard) — frozen
-        generations make the cache sound, and the mask recompute per
-        query is a few numpy ops."""
-        import pyarrow.parquet as pq
+    # -- bool family: one plan, one shard loop, the shared reducers -----
 
-        from geospatial_spark.operators import metafilter as mf
+    def _bool_shards(self, plan, op):
+        """The serving placement of a bool-family op
+        (operators/boolquery.py): per generation, the plan's term rows
+        through the term-row LRU (doc streams only), every shard of the
+        generation when the plan is pure-NOT, then the shared shard
+        step over cached docmap columns. Yields the op's per-shard
+        partial columns."""
+        for g in self.gens:
+            gen_id = g["id"]
+            reader = self._reader(gen_id)
+            cols = [c for c in reader.schema_names
+                    if not c.startswith("imp_") and c != "pos_blocks"]
+            by_shard: dict[int, dict[str, dict]] = {}
+            for r in self._cached_rows(gen_id, reader, list(plan.scan_terms),
+                                       cols, "b"):
+                by_shard.setdefault(int(r["shard"]), {})[r["term"]] = r
+            if plan.pure_not:
+                # complement path: shards with no scanned term row
+                # still hold hits — run the step on every shard
+                for (g_id, shard) in self.shard_docs:
+                    if g_id == gen_id:
+                        by_shard.setdefault(shard, {})
+            for shard, rows_by_term in by_shard.items():
+                part = bool_shard(
+                    plan, op, rows_by_term, self.shard_docs[(gen_id, shard)],
+                    shard << ORD_SHARD_SHIFT,
+                    functools.partial(self._docmap_column, gen_id, shard))
+                if part is not None:
+                    yield part
 
-        cols = tuple(mf.needed_cols(meta))
-        key = (gen_id, shard, cols)
-        t = self._meta_col_cache.get(key)
-        if t is None:
-            path = self.gdirs[gen_id] / self.docmap_files[(gen_id, shard)]
-            pf = pq.ParquetFile(path)
-            have = set(pf.schema_arrow.names)
-            missing = [c for c in cols if c not in have]
-            if missing:
-                raise ValueError(
-                    f"index docmap lacks metadata columns {missing} — "
-                    "built before the docmap-v2 format; rebuild to serve "
-                    "metadata-filtered queries")
-            t = pf.read(columns=list(cols))
-            self._meta_col_cache[key] = t
-        return mf.meta_mask_table(t, meta)
+    def search_bool(self, should: str = "", filter_q: str = "",
+                    must_not: str = "", k: int = 10,
+                    meta: dict | None = None,
+                    quantized: bool = False,
+                    min_should_match: int = 1,
+                    boosts: dict[str, float] | None = None
+                    ) -> list[tuple[str, float]]:
+        """Bool query (operators/boolquery.py): scored should-OR
+        restricted by filter-AND, must_not-NOT and the metadata
+        predicate (operators/metafilter.py); min_should_match 0 =
+        optional should, >1 = that many distinct should terms; optional
+        per-should-term boosts."""
+        plan = plan_bool(self, should, filter_q, must_not, meta=meta,
+                         min_should_match=min_should_match, boosts=boosts,
+                         quantized=quantized)
+        return [] if plan is None else self._bool_topk(plan, int(k))
+
+    def _bool_topk(self, plan, k: int) -> list[tuple[str, float]]:
+        cand: list[tuple[float, str, int, str]] = []
+        for part in self._bool_shards(plan, TopK(k)):
+            for doc_id, sc in zip(part["doc_id"], part["score"]):
+                conv, _, turn = doc_id.rpartition(":")
+                cand.append((-float(sc), conv, int(turn), doc_id))
+        cand.sort()
+        return [(d, -neg) for neg, _, _, d in cand[:k]]
 
     def facet_counts(self, should: str = "", filter_q: str = "",
                      must_not: str = "", meta: dict | None = None,
                      field: str = "role") -> dict[str, int]:
-        """Facet aggregation over a query's full match set — the
-        serving-path twin of IndexSearcher.facet_counts."""
-        return _facet_counts_local(self, should, filter_q, must_not,
-                                   meta, field)
+        """Matching docs per value of a docmap field (or UTC time
+        bucket) over the query's full match set; NULL values are
+        excluded."""
+        op = FacetCounts(field)
+        plan = plan_bool(self, should, filter_q, must_not, meta=meta,
+                         need=op.cols)
+        return {} if plan is None else self._facet_counts(plan, op)
+
+    def _facet_counts(self, plan, op) -> dict[str, int]:
+        out: dict[str, int] = {}
+        for part in self._bool_shards(plan, op):
+            for v, n in zip(part["facet"], part["n"]):
+                out[v] = out.get(v, 0) + int(n)
+        return out
 
     def match_stats(self, should: str = "", filter_q: str = "",
                     must_not: str = "",
                     meta: dict | None = None) -> dict:
-        """Match-set stats on the serving path — the twin of
-        IndexSearcher.match_stats_df: {n_matched, sum_dl, min_ts_us,
-        max_ts_us} over the bool match set (docmap dl/ts per shard,
-        nulls excluded from min/max)."""
-        import pyarrow.parquet as pq
+        """{n_matched, sum_dl, min_ts_us, max_ts_us} over the bool
+        match set (docmap dl/ts per shard, nulls excluded from
+        min/max)."""
+        return self._match_stats(
+            plan_bool(self, should, filter_q, must_not, meta=meta))
 
-        from geospatial_spark.operators.boolquery import bool_match_shard
-        from geospatial_spark.operators.metafilter import normalize_meta
-
-        meta = normalize_meta(meta)
-        s = self
-        norm = s.manifest.get("normalization") or {}
-
-        def toks(text: str) -> list[str]:
-            return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-        sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
+    def _match_stats(self, plan) -> dict:
+        parts = ([] if plan is None
+                 else list(self._bool_shards(plan, MatchStats())))
+        lo = [p["min_ts"][0] for p in parts if p["min_ts"][0] is not None]
+        hi = [p["max_ts"][0] for p in parts if p["max_ts"][0] is not None]
         # sum_dl is None (SQL NULL) for an empty match set — the exact
         # contract of the Spark tier's F.sum and the oracle's sum()
-        out = {"n_matched": 0, "sum_dl": None,
-               "min_ts_us": None, "max_ts_us": None}
-        if s.n_docs == 0:
-            return out
-        pure_not = not sh and not fl
-        df_global = s._df_for(sorted(set(sh + fl + mn)))
-        if any(t not in df_global for t in fl):
-            return out
-        sh = [t for t in sh if t in df_global]
-        if should and not sh:
-            return out
-        mn = [t for t in mn if t in df_global]
-        scan_terms = sorted(set(sh + fl + mn))
-
-        for g in s.gens:
-            gen_id = g["id"]
-            reader = s._reader(gen_id)
-            cols = [c for c in reader.schema_names
-                    if not c.startswith("imp_") and c != "pos_blocks"]
-            by_shard: dict[int, dict[str, dict]] = {}
-            for r in s._cached_rows(gen_id, reader, scan_terms, cols, "b"):
-                by_shard.setdefault(int(r["shard"]), {})[r["term"]] = r
-            if pure_not:
-                for (g_id, shard) in s.shard_docs:
-                    if g_id == gen_id:
-                        by_shard.setdefault(shard, {})
-            for shard, rows_by_term in by_shard.items():
-                base = shard << ORD_SHARD_SHIFT
-                n_local = s.shard_docs[(gen_id, shard)]
-                amask = (s._meta_mask(gen_id, shard, meta)
-                         if meta is not None else None)
-                local, _sc = bool_match_shard(
-                    sh, fl, mn, rows_by_term, n_local, base, df_global,
-                    s.n_docs, s.avgdl, max(n_local, 1), allowed_init=amask)
-                if len(local) == 0:
-                    continue
-                path = s.gdirs[gen_id] / s.docmap_files[(gen_id, shard)]
-                pf = pq.ParquetFile(path)
-                names = pf.schema_arrow.names
-                cols = ["dl"] + (["ts_us"] if "ts_us" in names else [])
-                dm = pf.read(columns=cols)  # never the doc_id strings
-                idx = local.tolist()
-                out["n_matched"] += len(idx)
-                out["sum_dl"] = (out["sum_dl"] or 0) + int(sum(
-                    dm.column("dl").take(idx).to_pylist()))
-                if "ts_us" in dm.column_names:
-                    ts = [t for t in
-                          dm.column("ts_us").take(idx).to_pylist()
-                          if t is not None]
-                    if ts:
-                        lo, hi = min(ts), max(ts)
-                        out["min_ts_us"] = (lo if out["min_ts_us"] is None
-                                            else min(out["min_ts_us"], lo))
-                        out["max_ts_us"] = (hi if out["max_ts_us"] is None
-                                            else max(out["max_ts_us"], hi))
-        return out
+        return {"n_matched": sum(p["n"][0] for p in parts),
+                "sum_dl": (sum(p["sum_dl"][0] for p in parts)
+                           if parts else None),
+                "min_ts_us": min(lo) if lo else None,
+                "max_ts_us": max(hi) if hi else None}
 
     def search_collapsed(self, should: str = "", filter_q: str = "",
                          must_not: str = "", k: int = 10,
                          meta: dict | None = None, field: str = "role"
                          ) -> list[tuple[str, str, float]]:
-        """Field-collapsed top-k (field_value, doc_id, score) — the
-        serving-path twin of IndexSearcher.search_collapsed."""
-        return _search_collapsed_local(self, should, filter_q, must_not,
-                                       k, meta, field)
+        """Field-collapsed top-k (field_value, doc_id, score): the best
+        hit per docmap field value under (round(score, ORDER_DP) desc,
+        doc_id asc), then the top-k values in that order."""
+        op = Collapse(field)
+        plan = plan_bool(self, should, filter_q, must_not, meta=meta,
+                         need=op.cols)
+        return [] if plan is None else self._collapse(plan, op, int(k))
+
+    def _collapse(self, plan, op, k: int) -> list[tuple[str, str, float]]:
+        import pyarrow as pa
+
+        parts = [pa.table(p) for p in self._bool_shards(plan, op)
+                 if p["doc_id"]]  # all-NULL shards have no partial rows
+        if not parts:
+            return []
+        best = best_per_value(pa.concat_tables(parts)).slice(0, k)
+        return list(zip(*(best.column(c).to_pylist()
+                          for c in ("collapse", "doc_id", "score"))))
 
     def _texts_for(self, ids: list[str]) -> dict[str, str]:
         """doc_id → text for a bounded id set via the configured
@@ -1237,20 +1197,18 @@ class LocalSearcher:
             hits = [h for h in hits if h[0] != doc_id][:int(k)]
         return hits
 
-    def _docmap_col(self, gen_id: str, shard: int):
-        """The (gen, shard) docmap's doc_id column, via the same cache
-        the scoring path fills (search() resolves kernel ordinals from
-        it) — an explain probe on a warm shard costs no read."""
-        import pyarrow.parquet as pq
-
-        key = (gen_id, shard)
-        col = self._docmap_cache.get(key)
-        if col is None:
-            col = pq.read_table(
-                self.gdirs[gen_id] / self.docmap_files[key],
-                columns=["doc_id"]).column("doc_id").combine_chunks()
-            self._docmap_cache[key] = col
-        return col
+    def _docmap_column(self, gen_id: str, shard: int, name: str):
+        """One docmap column of a (gen, shard) through the docmap cache
+        (None when the docmap predates the column): doc_id resolves
+        kernel ordinals, and role / ts_us / dl feed the metadata mask
+        and the bool-family reducers. Preloaded with doc_id when
+        preload_docmaps=True."""
+        key = (gen_id, shard, name)
+        if key not in self._docmap_cache:
+            self._docmap_cache[key] = read_docmap_column(
+                self.gdirs[gen_id] / self.docmap_files[(gen_id, shard)],
+                name)
+        return self._docmap_cache[key]
 
     def locate_doc(self, doc_id: str) -> tuple[str, int, int] | None:
         """(generation, shard, shard-local ordinal) of a doc, or None.
@@ -1266,7 +1224,7 @@ class LocalSearcher:
                 sh = int(s["shard"])
                 if (g["id"], sh) not in self.docmap_files:
                     continue
-                idx = pc.index(self._docmap_col(g["id"], sh),
+                idx = pc.index(self._docmap_column(g["id"], sh, "doc_id"),
                                pa.scalar(doc_id)).as_py()
                 if idx >= 0:
                     return g["id"], sh, int(idx)
@@ -1302,231 +1260,6 @@ class LocalSearcher:
         return {"doc_id": doc_id, "generation": gen_id, "shard": shard,
                 "ordinal": ordn, "entries": entries,
                 "score": float(sum(e["contribution"] for e in entries))}
-
-    def search_bool(self, should: str = "", filter_q: str = "",
-                    must_not: str = "", k: int = 10,
-                    meta: dict | None = None,
-                    quantized: bool = False,
-                    min_should_match: int = 1,
-                    boosts: dict[str, float] | None = None
-                    ) -> list[tuple[str, float]]:
-        """Bool query on the serving path — same contract as
-        IndexSearcher.search_bool, including the metadata-filter
-        predicate (operators/metafilter.py), min_should_match
-        (0 = optional should, >1 = require that many distinct should
-        terms) and per-should-term boosts."""
-        import pyarrow.parquet as pq
-
-        from geospatial_spark.operators.boolquery import bool_match_shard
-        from geospatial_spark.operators.metafilter import normalize_meta
-
-        meta = normalize_meta(meta)
-        norm = self.manifest.get("normalization") or {}
-
-        def toks(text: str) -> list[str]:
-            return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-        bst = None
-        if boosts:
-            bst = {t: float(w) for key, w in boosts.items()
-                   for t in toks(str(key))} or None
-
-        sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
-        if self.n_docs == 0:
-            return []
-        msm = int(min_should_match)
-        if msm < 0:
-            raise ValueError("min_should_match must be >= 0")
-        pure_not = (not sh or msm == 0) and not fl
-        df_global = self._df_for(sorted(set(sh + fl + mn)))
-        if any(t not in df_global for t in fl):
-            return []
-        sh = [t for t in sh if t in df_global]
-        if should and not sh and msm > 0:
-            return []
-        if sh and msm > len(sh):
-            return []
-        mn = [t for t in mn if t in df_global]
-        scan_terms = sorted(set(sh + fl + mn))
-
-        candidates: list[tuple[float, str, int, str]] = []
-        for g in self.gens:
-            gen_id = g["id"]
-            gdir = self.gdirs[gen_id]
-            reader = self._reader(gen_id)
-            cols = [c for c in reader.schema_names
-                    if not c.startswith("imp_") and c != "pos_blocks"]
-            by_shard: dict[int, dict[str, dict]] = {}
-            for r in self._cached_rows(gen_id, reader, scan_terms, cols,
-                                       "b"):
-                by_shard.setdefault(int(r["shard"]), {})[r["term"]] = r
-            if pure_not:
-                # complement path: shards with no must_not postings
-                # still hold hits — run the kernel on every shard
-                for (g_id, shard) in self.shard_docs:
-                    if g_id == gen_id:
-                        by_shard.setdefault(shard, {})
-            for shard, rows_by_term in by_shard.items():
-                base = shard << ORD_SHARD_SHIFT
-                amask = (self._meta_mask(gen_id, shard, meta)
-                         if meta is not None else None)
-                local, scores = bool_match_shard(
-                    sh, fl, mn, rows_by_term,
-                    self.shard_docs[(gen_id, shard)], base, df_global,
-                    self.n_docs, self.avgdl, k, allowed_init=amask,
-                    quantize=quantized, min_should_match=msm, boosts=bst)
-                if len(local) == 0:
-                    continue
-                key = (gen_id, shard)
-                col = self._docmap_cache.get(key)
-                if col is None:
-                    col = pq.read_table(gdir / self.docmap_files[key],
-                                        columns=["doc_id"]).column("doc_id").combine_chunks()
-                    self._docmap_cache[key] = col
-                for doc_id, sc in zip(col.take(local.tolist()).to_pylist(),
-                                      scores):
-                    conv, _, turn = doc_id.rpartition(":")
-                    candidates.append((-float(sc), conv, int(turn), doc_id))
-        candidates.sort()
-        return [(d, -neg) for neg, _, _, d in candidates[:k]]
-
-
-def _search_collapsed_local(searcher: "LocalSearcher", should: str,
-                            filter_q: str, must_not: str, k: int,
-                            meta: dict | None, field: str
-                            ) -> list[tuple[str, str, float]]:
-    """Serving-path field collapse — same contract as
-    IndexSearcher.search_collapsed: best hit per docmap field value
-    under (round(score, ORDER_DP) desc, doc_id asc), top-k values."""
-    import pyarrow.parquet as pq
-
-    from geospatial_spark.functions.oracle_sql import ORDER_DP
-    from geospatial_spark.operators.boolquery import bool_match_shard
-    from geospatial_spark.operators.metafilter import normalize_meta
-
-    if field not in ("role",):
-        raise ValueError(f"unsupported collapse field {field!r}")
-    meta = normalize_meta(meta)
-    s = searcher
-    norm = s.manifest.get("normalization") or {}
-
-    def toks(text: str) -> list[str]:
-        return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-    sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
-    if s.n_docs == 0:
-        return []
-    pure_not = not sh and not fl
-    df_global = s._df_for(sorted(set(sh + fl + mn)))
-    if any(t not in df_global for t in fl):
-        return []
-    sh = [t for t in sh if t in df_global]
-    if should and not sh:
-        return []
-    mn = [t for t in mn if t in df_global]
-    scan_terms = sorted(set(sh + fl + mn))
-
-    # value -> (-rounded, doc_id, raw): merge keeps the contract-best
-    best: dict[str, tuple[float, str, float]] = {}
-    for g in s.gens:
-        gen_id = g["id"]
-        reader = s._reader(gen_id)
-        cols = [c for c in reader.schema_names
-                if not c.startswith("imp_") and c != "pos_blocks"]
-        by_shard: dict[int, dict[str, dict]] = {}
-        for r in s._cached_rows(gen_id, reader, scan_terms, cols, "b"):
-            by_shard.setdefault(int(r["shard"]), {})[r["term"]] = r
-        if pure_not:
-            for (g_id, shard) in s.shard_docs:
-                if g_id == gen_id:
-                    by_shard.setdefault(shard, {})
-        for shard, rows_by_term in by_shard.items():
-            base = shard << ORD_SHARD_SHIFT
-            n_local = s.shard_docs[(gen_id, shard)]
-            amask = (s._meta_mask(gen_id, shard, meta)
-                     if meta is not None else None)
-            local, sc = bool_match_shard(
-                sh, fl, mn, rows_by_term, n_local, base, df_global,
-                s.n_docs, s.avgdl, max(n_local, 1), allowed_init=amask)
-            if len(local) == 0:
-                continue
-            path = s.gdirs[gen_id] / s.docmap_files[(gen_id, shard)]
-            tbl = pq.read_table(path, columns=[field, "doc_id"])
-            vals = tbl.column(field).take(local.tolist()).to_pylist()
-            ids = tbl.column("doc_id").take(local.tolist()).to_pylist()
-            for v, d, raw in zip(vals, ids, sc):
-                if v is None:
-                    continue
-                cand = (-round(float(raw), ORDER_DP), d, float(raw))
-                cur = best.get(v)
-                if cur is None or cand[:2] < cur[:2]:
-                    best[v] = cand
-    ranked = sorted(((key[0], key[1], v, key[2])
-                     for v, key in best.items()))
-    return [(v, d, raw) for _, d, v, raw in ranked[:int(k)]]
-
-
-def _facet_counts_local(searcher: "LocalSearcher", should: str,
-                        filter_q: str, must_not: str,
-                        meta: dict | None, field: str) -> dict[str, int]:
-    """Serving-path facet aggregation — same contract as
-    IndexSearcher.facet_counts (full match set per shard → ordinal →
-    docmap field → summed counts; NULL values excluded)."""
-    from geospatial_spark.operators.boolquery import bool_match_shard
-    from geospatial_spark.operators.metafilter import (FACET_FIELDS,
-                                                       facet_values,
-                                                       normalize_meta)
-
-    if field not in FACET_FIELDS:
-        raise ValueError(f"unsupported facet field {field!r}")
-    meta = normalize_meta(meta)
-    s = searcher
-    norm = s.manifest.get("normalization") or {}
-
-    def toks(text: str) -> list[str]:
-        return sorted({norm.get(t, t) for t in tokenize_py(text)})
-
-    sh, fl, mn = toks(should), toks(filter_q), toks(must_not)
-    if s.n_docs == 0:
-        return {}
-    pure_not = not sh and not fl
-    df_global = s._df_for(sorted(set(sh + fl + mn)))
-    if any(t not in df_global for t in fl):
-        return {}
-    sh = [t for t in sh if t in df_global]
-    if should and not sh:
-        return {}
-    mn = [t for t in mn if t in df_global]
-    scan_terms = sorted(set(sh + fl + mn))
-
-    out: dict[str, int] = {}
-    for g in s.gens:
-        gen_id = g["id"]
-        reader = s._reader(gen_id)
-        cols = [c for c in reader.schema_names
-                if not c.startswith("imp_") and c != "pos_blocks"]
-        by_shard: dict[int, dict[str, dict]] = {}
-        for r in s._cached_rows(gen_id, reader, scan_terms, cols, "b"):
-            by_shard.setdefault(int(r["shard"]), {})[r["term"]] = r
-        if pure_not:
-            for (g_id, shard) in s.shard_docs:
-                if g_id == gen_id:
-                    by_shard.setdefault(shard, {})
-        for shard, rows_by_term in by_shard.items():
-            base = shard << ORD_SHARD_SHIFT
-            n_local = s.shard_docs[(gen_id, shard)]
-            amask = (s._meta_mask(gen_id, shard, meta)
-                     if meta is not None else None)
-            local, _sc = bool_match_shard(
-                sh, fl, mn, rows_by_term, n_local, base, df_global,
-                s.n_docs, s.avgdl, max(n_local, 1), allowed_init=amask)
-            if len(local) == 0:
-                continue
-            path = s.gdirs[gen_id] / s.docmap_files[(gen_id, shard)]
-            for v in facet_values(path, field, local.tolist()):
-                if v is not None:
-                    out[v] = out.get(v, 0) + 1
-    return out
 
 
 class _TsIndex:

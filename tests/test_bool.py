@@ -27,6 +27,17 @@ def searcher(spark, built_index):
 
 
 @pytest.fixture(scope="module")
+def dist(spark, built_index):
+    """The same index with the small-k local dispatch switched off, so
+    every call runs the distributed (Spark) plan."""
+    from geospatial_spark.plans.query import IndexSearcher
+
+    s = IndexSearcher(spark, built_index)
+    s.LOCAL_SEARCH_MAX_K = -1  # instance override: force the Spark path
+    return s
+
+
+@pytest.fixture(scope="module")
 def rows(small_transcripts_pd):
     return list(zip(small_transcripts_pd["conv_id"],
                     small_transcripts_pd["turn_idx"],
@@ -131,18 +142,23 @@ def test_bool_msm0_scores_match_msm1_on_shared_hits(searcher):
         assert math.isclose(opt[d], s, rel_tol=1e-12), d
 
 
-def test_bool_msm_local_searcher_parity(built_index, searcher):
+def test_bool_msm_local_searcher_parity(built_index, searcher, dist):
     from geospatial_spark.plans.serve import LocalSearcher
 
     ls = LocalSearcher(built_index)
-    for should, filter_q, must_not, msm in MSM_CASES:
+    cases = MSM_CASES + [
+        ("", "", "the spark", 1),           # pure-NOT: shard scaffold
+        ("deploy spark", "", "the", 0),     # optional should, no filter
+    ]
+    for should, filter_q, must_not, msm in cases:
         a = searcher.search_bool(should, filter_q, must_not, 10,
                                  min_should_match=msm)
-        b = ls.search_bool(should, filter_q, must_not, 10,
-                           min_should_match=msm)
-        assert [d for d, _ in a] == [d for d, _ in b], (should, msm)
-        for (_, sa), (_, sb) in zip(a, b):
-            assert math.isclose(sa, sb, rel_tol=1e-12)
+        for other in (ls, dist):
+            b = other.search_bool(should, filter_q, must_not, 10,
+                                  min_should_match=msm)
+            assert [d for d, _ in a] == [d for d, _ in b], (should, msm)
+            for (_, sa), (_, sb) in zip(a, b):
+                assert math.isclose(sa, sb, rel_tol=1e-12)
 
 
 BOOST_CASES = [
@@ -165,18 +181,19 @@ def test_bool_boosts(searcher, small_oracle, rows,
         assert math.isclose(gs, ws, rel_tol=1e-9, abs_tol=1e-12), gd
 
 
-def test_bool_boosts_serve_parity(built_index, searcher):
+def test_bool_boosts_serve_parity(built_index, searcher, dist):
     from geospatial_spark.plans.serve import LocalSearcher
 
     ls = LocalSearcher(built_index)
     for boosts, should, filter_q, must_not, msm in BOOST_CASES:
         a = searcher.search_bool(should, filter_q, must_not, 10,
                                  min_should_match=msm, boosts=boosts)
-        b = ls.search_bool(should, filter_q, must_not, 10,
-                           min_should_match=msm, boosts=boosts)
-        assert [d for d, _ in a] == [d for d, _ in b], boosts
-        for (_, sa), (_, sb) in zip(a, b):
-            assert math.isclose(sa, sb, rel_tol=1e-12)
+        for other in (ls, dist):
+            b = other.search_bool(should, filter_q, must_not, 10,
+                                  min_should_match=msm, boosts=boosts)
+            assert [d for d, _ in a] == [d for d, _ in b], boosts
+            for (_, sa), (_, sb) in zip(a, b):
+                assert math.isclose(sa, sb, rel_tol=1e-12)
 
 
 def test_bool_unit_boost_bit_identical(searcher):

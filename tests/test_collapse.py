@@ -29,6 +29,17 @@ def searcher(spark, built_index):
 
 
 @pytest.fixture(scope="module")
+def dist(spark, built_index):
+    """The same index with the small-k local dispatch switched off, so
+    every call runs the distributed (Spark) plan."""
+    from geospatial_spark.plans.query import IndexSearcher
+
+    s = IndexSearcher(spark, built_index)
+    s.LOCAL_SEARCH_MAX_K = -1  # instance override: force the Spark path
+    return s
+
+
+@pytest.fixture(scope="module")
 def local(built_index):
     from geospatial_spark.plans.serve import LocalSearcher
 
@@ -79,12 +90,13 @@ def test_collapse_matches_reference(searcher, small_oracle, rows, should):
 
 
 @pytest.mark.parametrize("should", QUERIES)
-def test_collapse_serving_parity(searcher, local, should):
+def test_collapse_serving_parity(searcher, local, dist, should):
     a = searcher.search_collapsed(should, k=10)
-    b = local.search_collapsed(should, k=10)
-    assert [(v, d) for v, d, _ in a] == [(v, d) for v, d, _ in b]
-    for (_, _, sa), (_, _, sb) in zip(a, b):
-        assert math.isclose(sa, sb, rel_tol=1e-12)
+    for other in (local, dist):
+        b = other.search_collapsed(should, k=10)
+        assert [(v, d) for v, d, _ in a] == [(v, d) for v, d, _ in b]
+        for (_, _, sa), (_, _, sb) in zip(a, b):
+            assert math.isclose(sa, sb, rel_tol=1e-12)
 
 
 def test_collapse_k_truncates(local):
@@ -113,14 +125,22 @@ def test_collapse_daemon_dispatch(local):
     assert got == want
 
 
-def test_collapse_with_filter_and_meta(searcher, local):
+def test_collapse_with_filter_and_meta(searcher, local, dist):
+    def same(a, b):
+        return len(a) == len(b) and all(
+            av == bv and ad == bd and math.isclose(asf, bsf, rel_tol=1e-12)
+            for (av, ad, asf), (bv, bd, bsf) in zip(a, b))
+
     a = searcher.search_collapsed("the spark", "deploy", k=10)
-    b = local.search_collapsed("the spark", "deploy", k=10)
-    assert a == b or all(
-        av == bv and ad == bd and math.isclose(asf, bsf, rel_tol=1e-12)
-        for (av, ad, asf), (bv, bd, bsf) in zip(a, b))
+    assert same(a, local.search_collapsed("the spark", "deploy", k=10))
+    assert same(a, dist.search_collapsed("the spark", "deploy", k=10))
     m = {"role": ["assistant", "user"]}
     am = searcher.search_collapsed("the spark", meta=m, k=10)
     bm = local.search_collapsed("the spark", meta=m, k=10)
     assert [(v, d) for v, d, _ in am] == [(v, d) for v, d, _ in bm]
     assert all(v in ("assistant", "user") for v, _, _ in am)
+    assert same(am, dist.search_collapsed("the spark", meta=m, k=10))
+    # pure-NOT under a metadata mask: every shard runs, scores are 0.0
+    pn = local.search_collapsed("", "", "spark", meta=m, k=10)
+    assert pn and all(s == 0.0 for _, _, s in pn)
+    assert same(pn, dist.search_collapsed("", "", "spark", meta=m, k=10))

@@ -29,6 +29,17 @@ def searcher(spark, built_index):
 
 
 @pytest.fixture(scope="module")
+def dist(spark, built_index):
+    """The same index with the small-k local dispatch switched off, so
+    every call runs the distributed (Spark) plan."""
+    from geospatial_spark.plans.query import IndexSearcher
+
+    s = IndexSearcher(spark, built_index)
+    s.LOCAL_SEARCH_MAX_K = -1  # instance override: force the Spark path
+    return s
+
+
+@pytest.fixture(scope="module")
 def local(built_index):
     from geospatial_spark.plans.serve import LocalSearcher
 
@@ -120,11 +131,14 @@ def test_meta_matches_reference(searcher, small_oracle, small_transcripts_pd,
         assert gs == pytest.approx(ws, abs=1e-9)
 
 
-@pytest.mark.parametrize("should,filter_q,must_not,meta", META_CASES[:6])
-def test_serve_parity(searcher, local, should, filter_q, must_not, meta):
+@pytest.mark.parametrize("should,filter_q,must_not,meta", META_CASES)
+def test_serve_parity(searcher, local, dist, should, filter_q, must_not,
+                      meta):
     a = searcher.search_bool(should, filter_q, must_not, k=10, meta=meta)
-    b = local.search_bool(should, filter_q, must_not, k=10, meta=meta)
-    assert [(d, round(s, 9)) for d, s in a] == [(d, round(s, 9)) for d, s in b]
+    for other in (local, dist):
+        b = other.search_bool(should, filter_q, must_not, k=10, meta=meta)
+        assert [(d, round(s, 9)) for d, s in a] == \
+            [(d, round(s, 9)) for d, s in b]
 
 
 def test_mixed_batch_meta(searcher):
@@ -161,6 +175,13 @@ def test_meta_validation():
         normalize_meta({"role": [1, 2]})
     m = normalize_meta({"ts_min": "2026-01-01T00:00:00"})
     assert m["ts_min_us"] == _ts_us(dt.datetime(2026, 1, 1))
+    # a None bound is absent: it never conflicts with its other spelling
+    assert normalize_meta({"ts_min": None, "ts_min_us": 5}) == \
+        {"ts_min_us": 5}
+    assert normalize_meta({"ts_max_us": None, "ts_max": 7}) == \
+        {"ts_max_us": 7}
+    with pytest.raises(ValueError, match="not both"):
+        normalize_meta({"ts_min": 1, "ts_min_us": 5})
 
 
 def test_old_docmap_rejected(spark, built_index, tmp_path):
@@ -177,9 +198,17 @@ def test_old_docmap_rejected(spark, built_index, tmp_path):
     for p in root.rglob("docmap-*.parquet"):
         t = pq.read_table(p)
         pq.write_table(t.drop_columns(["role", "ts_us"]), p)
+    from geospatial_spark.plans.serve import LocalSearcher
+
     s = IndexSearcher(spark, str(root))
     with pytest.raises(ValueError, match="docmap-v2"):
         s.search_bool("the", "", "", meta={"role": "assistant"})
+    # the check does not depend on the query reaching a shard: a should
+    # term absent from the corpus still fails fast, on both searchers
+    for srch in (s, LocalSearcher(str(root))):
+        with pytest.raises(ValueError, match="docmap-v2"):
+            srch.search_bool("zzz-not-in-corpus", "", "",
+                             meta={"role": "assistant"})
     # un-filtered queries on the same old index still work
     assert s.search_bool("the", "", "", k=3)
 
@@ -335,7 +364,7 @@ def test_metadata_change_invalidates_checkpoint(spark, tmp_path):
         "alpha", k=5, meta={"role": "user"})) == ["c1:0", "c1:1"]
 
 
-def test_facet_counts_parity(searcher, local, small_transcripts_pd):
+def test_facet_counts_parity(searcher, local, dist, small_transcripts_pd):
     """Facet counts over the full match set: brute pandas reference ≡
     Spark ≡ serving, with and without a metadata mask."""
     def ref(should, filter_q, meta):
@@ -365,6 +394,8 @@ def test_facet_counts_parity(searcher, local, small_transcripts_pd):
         assert got == want, (should, filter_q, meta)
         got_local = local.facet_counts(should, filter_q, "", meta=meta)
         assert got_local == want, (should, filter_q, meta)
+        got_dist = dist.facet_counts(should, filter_q, "", meta=meta)
+        assert got_dist == want, (should, filter_q, meta)
 
 
 def test_facet_counts_field_validation(searcher, local):

@@ -53,6 +53,8 @@ def test_match_stats_tier_parity(spark, stats_index, small_transcripts):
     from geospatial_spark.plans.serve import LocalSearcher
 
     ss = IndexSearcher(spark, stats_index)
+    sd = IndexSearcher(spark, stats_index)
+    sd.LOCAL_SEARCH_MAX_K = -1  # instance override: force the Spark path
     ls = LocalSearcher(stats_index)
     for args in [("spark merge", "the", ""), ("", "spark", "merge"),
                  ("", "", "the")]:
@@ -60,10 +62,21 @@ def test_match_stats_tier_parity(spark, stats_index, small_transcripts):
         got = {k: row[k] for k in ("n_matched", "sum_dl",
                                    "min_ts_us", "max_ts_us")}
         assert got == ls.match_stats(*args), args
+        row = sd.match_stats_df(*args).first()
+        assert got == {k: row[k] for k in got}, args
         # n_matched must equal the bool match-set size from search
         hits = ls.search_bool(args[0], args[1], args[2], ls.n_docs)
         assert got["n_matched"] == len(hits), args
         assert got["sum_dl"] > 0 and got["min_ts_us"] <= got["max_ts_us"]
+    # metadata mask, with and without a scored clause
+    for args in [("spark", "", ""), ("", "", "the")]:
+        meta = {"role": "user"}
+        want = ls.match_stats(*args, meta=meta)
+        assert 0 < want["n_matched"] == len(
+            ls.search_bool(*args, ls.n_docs, meta=meta)), args
+        for srch in (ss, sd):
+            row = srch.match_stats_df(*args, meta=meta).first()
+            assert {k: row[k] for k in want} == want, args
 
 
 def test_match_stats_empty_set_sum_is_null(spark, stats_index):
@@ -74,9 +87,13 @@ def test_match_stats_empty_set_sum_is_null(spark, stats_index):
     from geospatial_spark.plans.serve import LocalSearcher
 
     ss = IndexSearcher(spark, stats_index)
+    sd = IndexSearcher(spark, stats_index)
+    sd.LOCAL_SEARCH_MAX_K = -1  # instance override: force the Spark path
     ls = LocalSearcher(stats_index)
-    row = ss.match_stats_df("spark", "", "spark").first()
-    assert row["n_matched"] == 0 and row["sum_dl"] is None
+    for srch in (ss, sd):
+        row = srch.match_stats_df("spark", "", "spark").first()
+        assert row["n_matched"] == 0 and row["sum_dl"] is None
+        assert row["min_ts_us"] is None and row["max_ts_us"] is None
     got = ls.match_stats("spark", "", "spark")
     assert got["n_matched"] == 0 and got["sum_dl"] is None
 

@@ -48,16 +48,21 @@ def test_facet_hour_tier_parity(spark, sf_index):
     from geospatial_spark.plans.serve import LocalSearcher
 
     ss = IndexSearcher(spark, sf_index)
+    sd = IndexSearcher(spark, sf_index)
+    sd.LOCAL_SEARCH_MAX_K = -1  # instance override: force the Spark path
     ls = LocalSearcher(sf_index)
     a = ss.facet_counts("the spark", field="ts_hour")
     b = ls.facet_counts("the spark", field="ts_hour")
     assert a and a == b
+    assert a == sd.facet_counts("the spark", field="ts_hour")
     assert sum(a.values()) == len(ss.search("the spark", ss.n_docs))
     for bucket in a:
         assert len(bucket) == len("2026-01-01T00") and "T" in bucket
     # day buckets roll the same totals up
     d = ss.facet_counts("the spark", field="ts_day")
     assert sum(d.values()) == sum(a.values())
+    assert d == ls.facet_counts("the spark", field="ts_day")
+    assert d == sd.facet_counts("the spark", field="ts_day")
     with pytest.raises(ValueError):
         ss.facet_counts("the spark", field="nope")
 
