@@ -412,6 +412,22 @@ class Collapse(_FullMatchSet):
             "score": scores})).to_pydict()
 
 
+def round_dp(x, dp: int) -> np.ndarray:
+    """Python's correctly rounded ``round(v, dp)`` over an array.
+    ``np.round`` (multiply, then round half to even) differs from it
+    only where v·10^dp lands within an ulp of a half-integer — e.g.
+    22.4223825, stored just above the half-way point, which ``round``,
+    DuckDB and Spark take up and ``np.round`` takes down. Those rows
+    alone, almost never any, go through ``round``."""
+    v = np.asarray(x, dtype=np.float64)
+    y = v * 10.0 ** dp
+    r = np.rint(y) / 10.0 ** dp
+    near = np.abs(y - np.floor(y) - 0.5) <= np.spacing(np.abs(y))
+    for i in np.flatnonzero(near):
+        r[i] = round(float(v[i]), dp)
+    return r
+
+
 def best_per_value(t):
     """The collapse reduce over a pyarrow (collapse, doc_id, score)
     table: per distinct non-null value, its best row under the
@@ -424,7 +440,7 @@ def best_per_value(t):
     from geospatial_spark.functions.oracle_sql import ORDER_DP
 
     t = t.filter(pc.is_valid(t.column("collapse")))
-    r = np.round(t.column("score").to_numpy(), ORDER_DP)
+    r = round_dp(t.column("score").to_numpy(), ORDER_DP)
     t = t.append_column("r", pa.array(r)).sort_by(
         [("r", "descending"), ("doc_id", "ascending")])
     codes = pc.dictionary_encode(

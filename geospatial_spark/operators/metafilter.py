@@ -22,6 +22,9 @@ that field.
 
 from __future__ import annotations
 
+import functools
+import os
+
 import numpy as np
 
 # docmap columns the metadata path needs; indexes built before the
@@ -191,26 +194,29 @@ def docmap_reader(path):
     return col
 
 
+@functools.lru_cache(maxsize=1024)
+def _docmap_columns(path: str, mtime_ns: int) -> frozenset:
+    import pyarrow.parquet as pq
+
+    return frozenset(pq.ParquetFile(path).schema_arrow.names)
+
+
 def check_docmap_columns(index, need) -> None:
     """Fail fast, before any shard runs, when a generation's docmap
     lacks columns a request reads — an index built before the docmap-v2
-    format. One parquet footer per generation, memoized on the
-    searcher (``index._docmap_schema``): generations are frozen."""
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
+    format. One parquet footer per generation, memoized by file path
+    (and mtime): generations are frozen, so any searcher over the same
+    files — single-root, federated or serving — shares the entry."""
     need = set(need) - {"doc_id"}
     if not need:
         return
     for g in index.gens:
         if not g["shards"]:
             continue
-        have = index._docmap_schema.get(g["id"])
-        if have is None:
-            sh = int(g["shards"][0]["shard"])
-            path = Path(index.gdirs[g["id"]]) / index.docmap_files[(g["id"], sh)]
-            have = frozenset(pq.ParquetFile(path).schema_arrow.names)
-            index._docmap_schema[g["id"]] = have
+        sh = int(g["shards"][0]["shard"])
+        path = os.path.join(index.gdirs[g["id"]],
+                            index.docmap_files[(g["id"], sh)])
+        have = _docmap_columns(path, os.stat(path).st_mtime_ns)
         missing = sorted(need - have)
         if missing:
             raise ValueError(

@@ -117,7 +117,6 @@ class IndexSearcher:
         total_terms = sum(int(g.get("n_terms", 0)) for g in self.gens)
         self._dict_small = total_terms <= self.DICT_CACHE_MAX
         self._dict: dict[str, int] | None = None
-        self._docmap_schema: dict[str, frozenset] = {}  # gen → docmap columns
         # single-generation conveniences (used by tests/tools)
         self.gdir = lc.gen_dir(index_root, m["generation"])
 
@@ -947,18 +946,15 @@ class IndexSearcher:
         boosts): score = Σ boost_t · BM25_t over present should terms;
         matching semantics (msm, filter context) are unaffected. Keys
         run through the same tokenizer/normalizer as the clauses."""
-        local, plan = self._bool_placed(
+        hits = self._bool_hits(
             k, should, filter_q, must_not, meta=meta,
             min_should_match=min_should_match, boosts=boosts,
             quantized=quantized)
-        if plan is None:
-            return None
-        if local is not None:
-            return self.spark.createDataFrame(
-                [(d, float(s)) for d, s in local._bool_topk(plan, int(k))],
-                schema="doc_id string, score double")
-        return (self._bool_job(plan, TopK(k))
-                .orderBy(F.desc("score"), *merge_tie_break()).limit(int(k)))
+        if hits is None or isinstance(hits, DataFrame):
+            return hits
+        return self.spark.createDataFrame(
+            [(d, float(s)) for d, s in hits],
+            schema="doc_id string, score double")
 
     def search_bool(self, should: str = "", filter_q: str = "",
                     must_not: str = "", k: int = 10,
@@ -967,20 +963,28 @@ class IndexSearcher:
                     min_should_match: int = 1,
                     boosts: dict[str, float] | None = None
                     ) -> list[tuple[str, float]]:
-        local, plan = self._bool_placed(
+        hits = self._bool_hits(
             k, should, filter_q, must_not, meta=meta,
             min_should_match=min_should_match, boosts=boosts,
             quantized=quantized)
-        if plan is None:
-            return []
-        if local is not None:
-            return local._bool_topk(plan, int(k))
-        rows = (self._bool_job(plan, TopK(k))
-                .orderBy(F.desc("score"), *merge_tie_break())
-                .limit(int(k)).collect())
-        return [(r["doc_id"], float(r["score"])) for r in rows]
+        if isinstance(hits, DataFrame):
+            return [(r["doc_id"], float(r["score"])) for r in hits.collect()]
+        return hits or []
 
     # -- bool family: one plan, two placements -------------------------
+
+    def _bool_hits(self, k: int, should: str, filter_q: str,
+                   must_not: str, **kw):
+        """A placed bool top-k: the serving searcher's hit list when
+        the small-k guard places it locally, else the Spark job's merged
+        DataFrame; None when nothing can match."""
+        local, plan = self._bool_placed(k, should, filter_q, must_not, **kw)
+        if plan is None:
+            return None
+        if local is not None:
+            return local._bool_topk(plan, int(k))
+        return (self._bool_job(plan, TopK(k))
+                .orderBy(F.desc("score"), *merge_tie_break()).limit(int(k)))
 
     def _bool_placed(self, k: int, should: str, filter_q: str,
                      must_not: str, **kw):

@@ -102,7 +102,6 @@ class LocalSearcher:
         self._readers: dict[str, _SegmentReader] = {}
         # (gen, shard, column) → docmap column; frozen index → safe
         self._docmap_cache: dict[tuple[str, int, str], object] = {}
-        self._docmap_schema: dict[str, frozenset] = {}  # gen → docmap columns
         # term-row LRU: (gen, term, read-class) → segment rows; see
         # search() — the always-on serving process's hot cache
         from collections import OrderedDict

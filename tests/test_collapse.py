@@ -144,3 +144,27 @@ def test_collapse_with_filter_and_meta(searcher, local, dist):
     pn = local.search_collapsed("", "", "spark", meta=m, k=10)
     assert pn and all(s == 0.0 for _, _, s in pn)
     assert same(pn, dist.search_collapsed("", "", "spark", meta=m, k=10))
+
+
+def test_collapse_rounding_rule(spark):
+    """The collapse reduce orders by Python's correctly rounded
+    ``round``. 22.4223825 is stored just above the 6-dp half-way point:
+    Python, DuckDB and Spark round it up to 22.422383, so it ties the
+    higher score and wins on doc_id. ``np.round`` takes it down, which
+    would pick d1 instead."""
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from geospatial_spark.operators.boolquery import best_per_value
+
+    x, hi = 22.4223825, 22.422383
+    assert round(x, ORDER_DP) == hi
+    assert duckdb.sql(
+        f"SELECT round({x!r}::DOUBLE, {ORDER_DP})").fetchone()[0] == hi
+    assert spark.range(1).select(
+        F.round(F.lit(x), ORDER_DP)).first()[0] == hi
+    got = best_per_value(pa.table({"collapse": ["user", "user"],
+                                   "doc_id": ["d0", "d1"],
+                                   "score": [x, hi]})).to_pydict()
+    assert got == {"collapse": ["user"], "doc_id": ["d0"], "score": [x]}

@@ -44,6 +44,26 @@ def test_federated_equals_union_index(spark, fed_roots):
     bx = fed.search_bool("the spark", "job", "", N)
     by = uni.search_bool("the spark", "job", "", N)
     assert [d for d, _ in bx] == [d for d, _ in by]
+    # the bool family reads docmap metadata per generation: the meta
+    # predicate, facets, match stats and collapse see the same docs
+    meta = {"role": "assistant"}
+    mx = fed.search_bool("the spark", "", "", N, meta=meta)
+    my = uni.search_bool("the spark", "", "", N, meta=meta)
+    assert mx and [d for d, _ in mx] == [d for d, _ in my]
+    for (_, sx), (_, sy) in zip(mx, my):
+        assert math.isclose(sx, sy, rel_tol=1e-9)
+    for field in ("role", "ts_day"):
+        fx = fed.facet_counts("the spark", meta=meta, field=field)
+        assert fx and fx == uni.facet_counts("the spark", meta=meta,
+                                             field=field), field
+    sx, sy = (srch.match_stats_df("the spark", meta=meta).first().asDict()
+              for srch in (fed, uni))
+    assert sx["n_matched"] > 0 and sx == sy
+    cx = fed.search_collapsed("the spark", k=10)
+    cy = uni.search_collapsed("the spark", k=10)
+    assert cx and [(v, d) for v, d, _ in cx] == [(v, d) for v, d, _ in cy]
+    for (_, _, sx), (_, _, sy) in zip(cx, cy):
+        assert math.isclose(sx, sy, rel_tol=1e-9)
     px, py = dict(fed.search_phrase("the spark", N)), \
         dict(uni.search_phrase("the spark", N))
     assert set(px) == set(py)
