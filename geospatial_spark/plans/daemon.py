@@ -18,6 +18,7 @@ Transport is stdlib http.server on localhost: the point is the serving
 a production web stack. Endpoints:
 
     GET  /health        → manifest summary (state, n_docs, built_at)
+                          plus swap counts and the last swap error
     POST /search        → {"type": ..., "q": ..., "k": ...} → hits
     POST /search_batch  → [req, ...] → [hits, ...]
 
@@ -209,6 +210,11 @@ class IndexService:
         self._built_at = self._searcher.manifest.get("built_at_unix")
         self._last_check = time.monotonic()
         self.swaps = 0
+        # failed swap attempts (unreadable manifest, or a new index that
+        # would not open): the current index keeps serving, and /health
+        # reports the count and the last error instead of hiding them
+        self.swap_failures = 0
+        self.last_swap_error: str | None = None
         # request result cache (the shard-request-cache analogue —
         # OpenSearch caches whole query results per shard keyed by
         # request + index state; Ip2GeoCachedDao.java:119-138 is the
@@ -242,7 +248,8 @@ class IndexService:
     def _maybe_swap(self) -> None:
         try:
             m = lc.read_manifest(self.root)
-        except Exception:
+        except Exception as e:
+            self._swap_failed(e)
             return  # unreadable mid-publish: keep serving
         if not m or m.get("state") != lc.STATE_AVAILABLE:
             return  # building / failed: keep serving the current index
@@ -250,11 +257,16 @@ class IndexService:
             return
         try:
             fresh = self._fresh()
-        except Exception:
+        except Exception as e:
+            self._swap_failed(e)
             return  # partially landed: retry at the next interval
         self._searcher = fresh  # atomic ref swap
         self._built_at = fresh.manifest.get("built_at_unix")
         self.swaps += 1
+
+    def _swap_failed(self, e: Exception) -> None:
+        self.swap_failures += 1
+        self.last_swap_error = f"{type(e).__name__}: {e}"
 
     def handle(self, req: dict) -> list[list]:
         s = self.searcher()
@@ -287,6 +299,8 @@ class IndexService:
             "built_at_unix": s.manifest.get("built_at_unix"),
             "generations": [g["id"] for g in s.gens],
             "swaps": self.swaps,
+            "swap_failures": self.swap_failures,
+            "last_swap_error": self.last_swap_error,
             "request_cache": {"hits": self.cache_hits,
                               "misses": self.cache_misses,
                               "size": len(self._req_cache)},

@@ -98,6 +98,7 @@ class LocalSearcher:
         self._dict: dict[str, int] | None = None
         self._dict_loaded = False
         self._imp_terms: dict[str, set] = {}  # gen -> terms with impact copies
+        self._imp_flagged: set[str] = set()  # gens whose dictionary has has_imp
         self._seg_ds = None  # lazy pyarrow dataset over all generations
         self._readers: dict[str, _SegmentReader] = {}
         # (gen, shard, column) → docmap column; frozen index → safe
@@ -130,7 +131,6 @@ class LocalSearcher:
             sum(int(g.get("n_terms", 0)) for g in self.gens)
             <= self.DICT_CACHE_MAX)
         self._ts_cache: dict[str, int | None] | None = None  # decay path
-        self._kernel_pool = None  # lazy ThreadPoolExecutor (see _pool)
         if preload_docmaps:
             for g in self.gens:
                 for s in g["shards"]:
@@ -163,6 +163,8 @@ class LocalSearcher:
 
         for gen_id, d in self._dict_datasets():
             has_imp = "has_imp" in d.schema.names
+            if has_imp:
+                self._imp_flagged.add(gen_id)
             imp_terms = self._imp_terms.setdefault(gen_id, set())
             if self._dict is not None:
                 cols = ["term", "df"] + (["has_imp"] if has_imp else [])
@@ -494,17 +496,6 @@ class LocalSearcher:
             warmed += len(imp)
         return warmed
 
-    def _pool(self):
-        """Persistent kernel thread pool (lazy; shared with nothing —
-        reads have their own pool inside _SegmentReader)."""
-        if self._kernel_pool is None:
-            import os as _os
-            from concurrent.futures import ThreadPoolExecutor
-
-            self._kernel_pool = ThreadPoolExecutor(
-                max_workers=min(8, _os.cpu_count() or 4))
-        return self._kernel_pool
-
     def _reader(self, gen_id: str) -> "_SegmentReader":
         r = self._readers.get(gen_id)
         if r is None:
@@ -601,11 +592,13 @@ class LocalSearcher:
             # re-fetches block_last_doc with the byte streams on the
             # rare discovery overrun.
             light = self._light_cols(names)
-            cold_cols = [c for c in names
-                         if c not in ("imp_tail_doc_blocks",
-                                      "imp_tail_tf_blocks",
-                                      "imp_tail_dl_blocks",
-                                      "pos_blocks")]
+            # a cold-routed term has has_imp = 0 (the max over shards),
+            # so every impact cell of its rows is null: skip them all.
+            # A dictionary without has_imp routes every term cold, and
+            # those rows keep their impact head and skylines.
+            skip = (("imp_", "pos_blocks") if gen_id in self._imp_flagged
+                    else ("imp_tail_", "pos_blocks"))
+            cold_cols = [c for c in names if not c.startswith(skip)]
             # term-row LRU (the serving-node hot cache, the
             # Ip2GeoCachedDao.java:119-138 analogue): repeated terms skip
             # the parquet row-group read entirely — per-query read
@@ -653,11 +646,10 @@ class LocalSearcher:
                 ids = col.take(local.tolist()).to_pylist()
                 return list(zip(ids, scores))
 
-            # single-threaded scoring loop: measured A/B at sf0.1 — a
-            # shard thread pool slows LIGHT queries 2-5× (GIL contention
-            # on the python glue between the numpy kernels) and buys
-            # heavy queries ~nothing; reads are already threaded inside
-            # _SegmentReader where pyarrow releases the GIL
+            # single-threaded scoring loop, like the reads above: a
+            # measured A/B at sf0.1 found that a shard thread pool slows
+            # LIGHT queries 2-5× (GIL contention on the python glue
+            # between the numpy kernels) and buys heavy queries ~nothing
             results = [run(it) for it in by_shard.items()]
             for part in results:
                 for doc_id, sc in part:
@@ -1304,12 +1296,14 @@ class _TsIndex:
 
 
 class _SegmentReader:
-    """Row-group-pruned threaded reader over one generation's segment
-    files — the serving-grade I/O path. We own the format (term-sorted
-    rows, 256-row row groups, per-column statistics), so a term read
-    touches exactly the row groups whose [min,max] term range can hold
-    a query term: I/O ∝ matched postings, with none of the generic
-    dataset-scan overhead (~3 ms/file of fragment/stat evaluation)."""
+    """Row-group-pruned reader over one generation's segment files —
+    the serving-grade I/O path. We own the format (term-sorted rows,
+    256-row row groups, per-column statistics), so a term read touches
+    exactly the row groups whose [min,max] term range can hold a query
+    term: I/O ∝ matched postings, with none of the generic dataset-scan
+    overhead (~3 ms/file of fragment/stat evaluation). A read is one
+    serial pass per generation: the candidate row groups of every file,
+    then one term filter and one row conversion over all of them."""
 
     def __init__(self, gdir, shard_files: dict[int, "Path"] | None = None):
         from pathlib import Path as _P
@@ -1324,21 +1318,11 @@ class _SegmentReader:
             self._shard_file = {int(p.stem.split("-")[1]): p for p in self.files}
         self._pf: dict = {}
         self.schema_names: list[str] = []
-        self._pool = None  # persistent: pool spin-up costs ~180 ms/query
         if self.files:
             import pyarrow.parquet as pq
 
             self.schema_names = list(
                 pq.ParquetFile(self.files[0]).schema_arrow.names)
-
-    def _executor(self):
-        if self._pool is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            self._pool = ThreadPoolExecutor(
-                max_workers=min(32, max(1, len(self.files))),
-                thread_name_prefix="segread")
-        return self._pool
 
     def _file(self, path):
         ent = self._pf.get(path)
@@ -1363,29 +1347,25 @@ class _SegmentReader:
             self._pf[path] = ent
         return ent
 
-    def _read_file(self, path, terms, columns):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
+    def _groups(self, path, terms, columns):
+        """One file's row groups whose term range can hold a query
+        term, read unfiltered; None when no group can."""
         pf, mins, maxs = self._file(path)
         rgs = [i for i in range(len(mins))
                if any(mins[i] <= t <= maxs[i] for t in terms)]
         if not rgs:
-            return []
-        t = pf.read_row_groups(rgs, columns=columns, use_threads=False)
-        t = t.filter(pc.is_in(t.column("term"), value_set=pa.array(terms)))
-        return _rows_zero_copy(t)
+            return None
+        return pf.read_row_groups(rgs, columns=columns, use_threads=False)
+
+    def _read_file(self, path, terms, columns):
+        """Matched rows of one shard file (targeted fetch, explain)."""
+        return _matched_rows([self._groups(path, terms, columns)], terms)
 
     def read_terms(self, terms, columns):
-        """Matched rows for the given terms across all shard files,
-        threaded (pyarrow releases the GIL during reads)."""
+        """Matched rows for the given terms across all shard files."""
         cols = list(dict.fromkeys(["shard", "term"] + list(columns)))
-        if len(self.files) > 1:
-            parts = list(self._executor().map(
-                lambda p: self._read_file(p, terms, cols), self.files))
-        else:
-            parts = [self._read_file(p, terms, cols) for p in self.files]
-        return [r for part in parts for r in part]
+        return _matched_rows(
+            [self._groups(p, terms, cols) for p in self.files], terms)
 
     def make_fetch(self, shard: int, term: str, columns):
         """Targeted single-row heavy fetch: reads only the one shard
@@ -1449,32 +1429,50 @@ def _pythonize_streams(r: dict) -> dict:
     return r
 
 
+def _matched_rows(parts, terms) -> list[dict]:
+    """Row dicts of the given terms from candidate row-group tables
+    (None parts skipped): one concat, one term filter, one conversion."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts = [t for t in parts if t is not None]
+    if not parts:
+        return []
+    t = pa.concat_tables(parts)
+    t = t.filter(pc.is_in(t.column("term"), value_set=pa.array(terms)))
+    return _rows_zero_copy(t)
+
+
 def _rows_zero_copy(t) -> list[dict]:
     """Table → row dicts WITHOUT to_pylist's linear materialization:
     numeric list cells become zero-copy numpy slices, binary list cells
     stay pyarrow ListScalars (the scorer converts only the blocks it
     actually decodes — for a hot term that is a handful out of
     thousands), null cells become None."""
-    import numpy as np
     import pyarrow as pa
 
-    n = t.num_rows
-    rows: list[dict] = [{} for _ in range(n)]
+    rows: list[dict] = [{} for _ in range(t.num_rows)]
     for name, col in zip(t.column_names, t.columns):
-        arr = col.combine_chunks()
-        typ = arr.type
-        if pa.types.is_list(typ) and not pa.types.is_binary(typ.value_type):
-            valid = arr.is_valid().to_numpy(zero_copy_only=False)
-            offs = arr.offsets.to_numpy()
-            vals = arr.values.to_numpy(zero_copy_only=False)
-            for i in range(n):
-                rows[i][name] = (vals[offs[i]:offs[i + 1]]
+        typ = col.type
+        # chunk by chunk (one per source row group): no combine copy,
+        # and no int32 offset limit on a term's rows summed over shards
+        start = 0
+        for arr in col.chunks:
+            out = rows[start:start + len(arr)]
+            start += len(arr)
+            if pa.types.is_list(typ) and not pa.types.is_binary(
+                    typ.value_type):
+                valid = arr.is_valid().to_numpy(zero_copy_only=False)
+                offs = arr.offsets.to_numpy()
+                vals = arr.values.to_numpy(zero_copy_only=False)
+                for i, row in enumerate(out):
+                    row[name] = (vals[offs[i]:offs[i + 1]]
                                  if valid[i] else None)
-        elif pa.types.is_list(typ):
-            for i in range(n):
-                cell = arr[i]
-                rows[i][name] = cell if cell.is_valid else None
-        else:
-            for i, v in enumerate(arr.to_pylist()):
-                rows[i][name] = v
+            elif pa.types.is_list(typ):
+                for i, row in enumerate(out):
+                    cell = arr[i]
+                    row[name] = cell if cell.is_valid else None
+            else:
+                for row, v in zip(out, arr.to_pylist()):
+                    row[name] = v
     return rows

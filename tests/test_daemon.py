@@ -228,3 +228,47 @@ def test_cli_serve_smoke(daemon_index):
     finally:
         proc.send_signal(signal.SIGINT)
         proc.wait(timeout=30)
+
+
+def test_swap_failure_visible_in_health(daemon_index, tmp_path):
+    """A new AVAILABLE manifest that lists a missing generation cannot
+    be swapped in: /health counts the failed attempts and shows the
+    last error, and queries keep answering from the current index."""
+    import shutil
+
+    from geospatial_spark.plans import lifecycle as lc
+    from geospatial_spark.plans.daemon import dispatch, start_daemon
+    from geospatial_spark.plans.serve import LocalSearcher
+
+    root = tmp_path / "idx"
+    shutil.copytree(daemon_index, root)
+    local = LocalSearcher(str(root))
+    srv, port = start_daemon(str(root), check_interval=0.05)
+    try:
+        h0 = _get(port, "/health")
+        assert h0["swap_failures"] == 0 and h0["last_swap_error"] is None
+        m = lc.read_manifest(root)
+        lc.publish_manifest(root, {
+            **m, "built_at_unix": m["built_at_unix"] + 1,
+            "generations": m["generations"] + [
+                {**m["generations"][0], "id": "g9999"}]})
+        deadline = time.time() + 30
+        while time.time() < deadline:
+            # a request is what triggers the manifest check
+            _post(port, "/search", {"type": "match", "q": "the", "k": 3})
+            h = _get(port, "/health")
+            if h["swap_failures"] >= 1:
+                break
+            time.sleep(0.05)
+        assert h["swap_failures"] >= 1
+        assert "g9999" in h["last_swap_error"]
+        assert h["swaps"] == 0
+        assert h["built_at_unix"] == h0["built_at_unix"]
+        for q in ["deploy index merge", "the spark"]:
+            req = {"type": "match", "q": q, "k": 10}
+            got = _post(port, "/search", req)["hits"]
+            want = dispatch(local, req)
+            assert [d for d, _ in got] == [d for d, _ in want], q
+    finally:
+        srv.shutdown()
+        srv.server_close()

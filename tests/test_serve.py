@@ -208,3 +208,136 @@ def test_tiered_dictionary_fallback(serve_index):
     assert eager._dict is not None
     # hot-term warm-up still works off the filtered has_imp read
     assert lazy.warm_hot_terms() == eager.warm_hot_terms()
+
+
+def _plain_cell(v):
+    if v is None:
+        return None
+    if hasattr(v, "as_py"):  # pyarrow list scalar
+        return v.as_py()
+    if hasattr(v, "tolist"):  # zero-copy numpy slice
+        return v.tolist()
+    return v
+
+
+def _rows_by_key(rows):
+    out = {(int(r["shard"]), r["term"]): {c: _plain_cell(v)
+                                          for c, v in r.items()}
+           for r in rows}
+    assert len(out) == len(rows)  # one row per (shard, term)
+    return out
+
+
+def test_segment_reader_one_pass_equals_per_file(serve_index):
+    """The one-pass generation read returns exactly the rows of
+    per-file reads: a term held by only some shards, the terms on both
+    sides of a row-group boundary, and an absent term."""
+    import pyarrow.parquet as pq
+
+    from geospatial_spark.plans.serve import LocalSearcher
+
+    s = LocalSearcher(serve_index)
+    reader = s._reader(s.gens[0]["id"])
+    assert len(reader.files) >= 3
+    per_file = {p: set(pq.read_table(p, columns=["term"])
+                       .column("term").to_pylist()) for p in reader.files}
+    partial = sorted(set.union(*per_file.values())
+                     - set.intersection(*per_file.values()))[0]
+    multi = [p for p in reader.files
+             if pq.ParquetFile(p).metadata.num_row_groups >= 2]
+    assert multi, "fixture too small for 256-row row groups"
+    _pf, mins, maxs = reader._file(multi[0])
+    terms = sorted({partial, maxs[0], mins[1], "zzz-not-in-corpus"})
+    cols = reader.schema_names
+
+    got = reader.read_terms(terms, cols)
+    want = [r for p in reader.files
+            for r in reader._read_file(p, terms, cols)]
+    assert _rows_by_key(got) == _rows_by_key(want)
+    shards_of = {t: {int(r["shard"]) for r in got if r["term"] == t}
+                 for t in terms}
+    assert 0 < len(shards_of[partial]) < len(reader.files)
+    assert shards_of[maxs[0]] and shards_of[mins[1]]
+    assert not shards_of["zzz-not-in-corpus"]
+    assert reader.read_terms(["zzz-not-in-corpus", "zzz-absent-too"],
+                             cols) == []
+
+
+def test_serving_starts_no_threads(serve_index):
+    """Segment reads and kernels run on the calling thread: a fresh
+    searcher answers every query family without starting a thread."""
+    import threading
+
+    from geospatial_spark.plans.serve import LocalSearcher
+
+    # live threads as a set, not a count: a thread of an earlier test
+    # ending meanwhile would hide a started one in a count
+    before = set(threading.enumerate())
+    s = LocalSearcher(serve_index)
+    assert s.search("deploy the spark job index merge", 10)
+    s.search_phrase("the spark", 10)
+    s.search_bool("deploy spark", "the", "job", 10)
+    s.facet_counts("the spark")
+    started = set(threading.enumerate()) - before
+    assert not started, [t.name for t in started]
+
+
+@pytest.fixture(scope="module")
+def hot_index(spark, small_transcripts, tmp_path_factory):
+    from geospatial_spark.plans.build import build_index
+
+    root = str(tmp_path_factory.mktemp("hot") / "idx")
+    build_index(spark, small_transcripts, root, n_shards=4, hot_df_copy=32)
+    return root
+
+
+def _assert_oracle_topk(s, oracle, q):
+    expected = oracle.search(q, 10)
+    got = s.search(q, 10)
+    assert [d for d, _ in got] == [d for d, _ in expected], q
+    for (_, gs), (_, es) in zip(got, expected):
+        assert math.isclose(gs, es, rel_tol=1e-9)
+
+
+def test_cold_reads_skip_impact_columns(hot_index, small_oracle):
+    """Cold-routed terms (has_imp = 0 in the dictionary) are read
+    without any imp_* column; a hot+cold query still equals the
+    oracle."""
+    from geospatial_spark.plans.serve import LocalSearcher
+
+    s = LocalSearcher(hot_index)
+    q = "the spark w100 w200 w5 singleton"
+    imp = s._imp_for(s.gens[0]["id"])
+    assert "the" in imp and "w200" not in imp  # one hot, one cold
+    _assert_oracle_topk(s, small_oracle, q)
+    cold = [r for key, rows in s._term_cache.items() if key[2] == "c"
+            for r in rows]
+    assert cold
+    assert not [c for r in cold for c in r if c.startswith("imp_")]
+
+
+def test_cold_reads_without_has_imp(hot_index, small_oracle, tmp_path):
+    """A dictionary without the has_imp column routes every term cold;
+    those reads keep the impact columns (a saturated term's rows still
+    carry its impact copy) and results still equal the oracle."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from geospatial_spark.plans import lifecycle as lc
+    from geospatial_spark.plans.serve import LocalSearcher
+
+    root = tmp_path / "idx"
+    shutil.copytree(hot_index, root)
+    for g in LocalSearcher(str(root)).gens:
+        for f in sorted((lc.gen_dir(root, g["id"]) / "dictionary")
+                        .glob("*.parquet")):
+            t = pq.read_table(f)
+            pq.write_table(t.drop_columns(["has_imp"]), f)
+    s = LocalSearcher(str(root))
+    for q in ["the spark w100 w200 w5 singleton", "the", "deploy the job"]:
+        _assert_oracle_topk(s, small_oracle, q)
+    assert not s._imp_for(s.gens[0]["id"])
+    cold = [r for key, rows in s._term_cache.items() if key[2] == "c"
+            for r in rows]
+    assert any(r.get("imp_sky_off") is not None for r in cold)
