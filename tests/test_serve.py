@@ -231,7 +231,8 @@ def _rows_by_key(rows):
 def test_segment_reader_one_pass_equals_per_file(serve_index):
     """The one-pass generation read returns exactly the rows of
     per-file reads: a term held by only some shards, the terms on both
-    sides of a row-group boundary, and an absent term."""
+    sides of a row-group boundary, and absent terms inside and outside
+    every row group's term range."""
     import pyarrow.parquet as pq
 
     from geospatial_spark.plans.serve import LocalSearcher
@@ -247,13 +248,18 @@ def test_segment_reader_one_pass_equals_per_file(serve_index):
              if pq.ParquetFile(p).metadata.num_row_groups >= 2]
     assert multi, "fixture too small for 256-row row groups"
     _pf, mins, maxs = reader._file(multi[0])
-    terms = sorted({partial, maxs[0], mins[1], "zzz-not-in-corpus"})
+    inner = "w1000q"  # absent, but inside a row group's range
+    assert inner not in set.union(*per_file.values())
+    assert any(mn <= inner <= mx for p in reader.files
+               for mn, mx in zip(*reader._file(p)[1:]))
+    terms = sorted({partial, maxs[0], mins[1], inner, "zzz-not-in-corpus"})
     cols = reader.schema_names
 
     got = reader.read_terms(terms, cols)
     want = [r for p in reader.files
             for r in reader._read_file(p, terms, cols)]
     assert _rows_by_key(got) == _rows_by_key(want)
+    assert {r["term"] for r in got} == {partial, maxs[0], mins[1]}
     shards_of = {t: {int(r["shard"]) for r in got if r["term"] == t}
                  for t in terms}
     assert 0 < len(shards_of[partial]) < len(reader.files)
