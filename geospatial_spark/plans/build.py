@@ -729,16 +729,18 @@ def _build_index_locked(
             "shard_key",
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_shards)).cast("int"))
         # ONE explicit shuffle into exactly n_shards partitions keyed by
-        # shard_key — one shard kernel per task. Leaving the exchange to
-        # spark.sql.shuffle.partitions hashes many shard-groups into few
-        # tasks: with 128 shards over 8 slots the multinomial imbalance
-        # puts ~21 groups in the largest task (~1.3× the mean), and the
-        # stage waits on it — measured as the dominant scaling loss
-        # between 2 and 8 cores. hashpartitioning(shard_key, n_shards)
-        # already satisfies applyInPandas' clustering requirement, so no
-        # second exchange is added, and the explicit partition count pins
-        # AQE away from coalescing kernels together (same trap as the
-        # merge path, compact.py).
+        # shard_key. This is not one shard kernel per task: the exchange
+        # Murmur3-hashes the shard number, so shards collide (16 shards
+        # land on 10 partitions, at most 2 in one). Leaving the exchange
+        # to spark.sql.shuffle.partitions hashes many shard-groups into
+        # fewer tasks still: with 128 shards over 8 slots the multinomial
+        # imbalance puts ~21 groups in the largest task (~1.3× the mean),
+        # and the stage waits on it — measured as the dominant scaling
+        # loss between 2 and 8 cores. hashpartitioning(shard_key,
+        # n_shards) already satisfies applyInPandas' clustering
+        # requirement, so no second exchange is added, and the explicit
+        # partition count pins AQE away from coalescing kernels together
+        # (same trap as the merge path, compact.py).
         metrics_df = (keyed.repartition(n_shards, "shard_key")
                       .groupBy("shard_key").applyInPandas(
             _make_shard_builder(str(gdir), normalization, hot_df_copy, storage,

@@ -35,6 +35,8 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +46,7 @@ from geospatial_spark.plans.build import (
     HOT_DF_COPY,
     ORD_SHARD_SHIFT,
     _build_dictionary,
+    _seg_schema,
     _write_parquet,
     encode_runs_to_segments,
 )
@@ -55,6 +58,10 @@ _DOCMAP_METRIC = ("shard int, docs long, total_tokens long, "
 # (source generation, source ordinal) pair, which is unique by
 # construction, never on doc_id
 _SEG_METRIC = ("shard int, postings long, bytes long, segment_file string")
+
+# the segment columns _bulk_decode_segment reads
+_BLOCK_COLS = ["df", "doc_blocks", "tf_blocks", "dl_blocks", "pos_blocks",
+               "block_last_doc"]
 
 _CONV_EXPR = ("substring(doc_id, 1, length(doc_id) - "
               "length(substring_index(doc_id, ':', -1)) - 1)")
@@ -113,7 +120,12 @@ def _make_posting_decoder(gen_index: dict[str, int]):
                 "tf": pd.Series([], dtype="int64"),
                 "dl": pd.Series([], dtype="int64"),
                 "positions": pd.Series([], dtype=object)})
-        dfs, src_ords, tfs, dls, pos_flat, rtb = _bulk_decode_segment(pdf)
+        seg_schema = _seg_schema()
+        dfs, src_ords, tfs, dls, pos_flat, rtb = _bulk_decode_segment(
+            pa.Table.from_pandas(
+                pdf[_BLOCK_COLS], preserve_index=False,
+                schema=pa.schema([seg_schema.field(c)
+                                  for c in _BLOCK_COLS])))
         # positions travel the shuffle as ONE small varint-bytes cell
         # per posting (delta within the posting, first value absolute —
         # the run encoding, so the encoder bulk-decodes them back with
@@ -185,10 +197,30 @@ def _encode_rows(shard: int, pdf: pd.DataFrame, gdir: Path,
                           "bytes": int(n_bytes), "segment_file": name}])
 
 
-def _bulk_decode_segment(pdf: pd.DataFrame):
+def _blocks_stream(col: pa.ChunkedArray):
+    """A list<binary> column's blocks as one byte stream: per chunk, the
+    flattened values' data buffer between their first and last offset
+    (zero-copy for a one-chunk column; a sliced chunk's flattened
+    values start at a non-zero array offset). binary, as _seg_schema
+    declares it, has int32 offsets."""
+    parts = []
+    for chunk in col.chunks:
+        flat = chunk.flatten()
+        if len(flat) == 0:
+            continue
+        _, offs_buf, data = flat.buffers()
+        offs = np.frombuffer(offs_buf, dtype=np.int32)
+        lo, hi = int(offs[flat.offset]), int(offs[flat.offset + len(flat)])
+        if hi > lo:
+            parts.append(memoryview(data)[lo:hi])
+    return parts[0] if len(parts) == 1 else b"".join(parts)
+
+
+def _bulk_decode_segment(t: pa.Table):
     """Whole-segment bulk decode: ONE varint pass per stream over ALL
-    terms' concatenated blocks (the per-term loop costs ~170 µs/term of
-    numpy call overhead — the measured dominator of merge decode).
+    terms' concatenated blocks, read straight from the Arrow buffers
+    (the per-term loop costs ~170 µs/term of numpy call overhead — the
+    measured dominator of merge decode).
 
     Returns (dfs, src_ords(global), tfs, dls, pos_flat, rtb) where term
     t's postings occupy [cum_dfs[t], cum_dfs[t+1]) and pos_flat holds
@@ -199,26 +231,26 @@ def _bulk_decode_segment(pdf: pd.DataFrame):
         varint_decode,
     )
 
-    dfs = pdf["df"].to_numpy(np.int64)
+    dfs = t.column("df").to_numpy().astype(np.int64)
     n = len(dfs)
     nblocks = -(-dfs // BLOCK)
     total_blocks = int(nblocks.sum())
     block_term = np.repeat(np.arange(n), nblocks)
-    first_block = np.concatenate(([0], np.cumsum(nblocks)[:-1]))
+    first_block = np.cumsum(nblocks) - nblocks
     block_in_term = np.arange(total_blocks) - first_block[block_term]
     lens = np.where(block_in_term == nblocks[block_term] - 1,
                     dfs[block_term] - (nblocks[block_term] - 1) * BLOCK,
                     BLOCK).astype(np.int64)
 
-    def cat(col):
-        return b"".join(b for cell in pdf[col] for b in cell)
+    def stream(col):
+        return _blocks_stream(t.column(col))
 
-    gaps = varint_decode(cat("doc_blocks")).astype(np.int64)
-    tfs = varint_decode(cat("tf_blocks")).astype(np.int64)
-    dls = varint_decode(cat("dl_blocks")).astype(np.int64)
-    starts_flat = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    blast_flat = np.concatenate(
-        [np.asarray(x, dtype=np.int64) for x in pdf["block_last_doc"]])
+    gaps = varint_decode(stream("doc_blocks")).astype(np.int64)
+    tfs = varint_decode(stream("tf_blocks")).astype(np.int64)
+    dls = varint_decode(stream("dl_blocks")).astype(np.int64)
+    starts_flat = np.cumsum(lens) - lens
+    blast_flat = pc.list_flatten(
+        t.column("block_last_doc")).to_numpy().astype(np.int64)
     prev_last = np.where(block_in_term > 0,
                          blast_flat[np.arange(total_blocks) - 1], 0)
     gaps[starts_flat] += prev_last
@@ -226,7 +258,7 @@ def _bulk_decode_segment(pdf: pd.DataFrame):
     seg_off = cs[starts_flat] - gaps[starts_flat]
     src_ords = cs - np.repeat(seg_off, lens)  # GLOBAL source ordinals
 
-    pos_flat = decode_positions_stream(cat("pos_blocks"), tfs)
+    pos_flat = decode_positions_stream(stream("pos_blocks"), tfs)
     rtb = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
     return dfs, src_ords, tfs, dls, pos_flat, rtb
 
@@ -266,16 +298,11 @@ def _merge_segments_colocated(shard: int, gdir: Path,
         # large I/Os — the merge reads whole segments, and on a cold
         # page cache (or an object store) scattered small reads are
         # the wall-clock term
-        t = pq.read_table(seg_path,
-                          columns=["term", "df", "doc_blocks",
-                                   "tf_blocks", "dl_blocks",
-                                   "pos_blocks", "block_last_doc"],
+        t = pq.read_table(seg_path, columns=["term", *_BLOCK_COLS],
                           pre_buffer=True)
         if t.num_rows == 0:
             continue
-        pdfs = t.to_pandas()
-        dfs, src_ords, tfs, dls, pos_flat, _rtb = \
-            _bulk_decode_segment(pdfs)
+        dfs, src_ords, tfs, dls, pos_flat, _rtb = _bulk_decode_segment(t)
         gi = int(gen_index[gen])
         if gi not in by_gen:
             raise RuntimeError("merge: postings from a generation "
@@ -286,7 +313,7 @@ def _merge_segments_colocated(shard: int, gdir: Path,
                 (sorted_so[np.minimum(pos_in, len(sorted_so) - 1)]
                  != src_ords).any():
             raise RuntimeError("merge: posting doc missing from docmap")
-        term_l.append(pdfs["term"].to_numpy(dtype="U"))
+        term_l.append(t.column("term").to_numpy().astype("U"))
         df_l.append(dfs)
         dest_l.append(row_idx[pos_in])
         tf_l.append(tfs)
@@ -368,8 +395,8 @@ def _make_fused_merger(gdir_str: str, storage: str, hot_df_copy: int,
     """Fused colocated merge kernel: when the new shard count DIVIDES
     every generation's old count, hash(conv) mod n_new == (hash mod
     n_old) mod n_new, so destination shard s is exactly the union of
-    source shards {t : t % n_new == s}. One task per destination then
-    does BOTH merge phases shard-locally — build + write the merged
+    source shards {t : t % n_new == s}. One kernel call per destination
+    then does BOTH merge phases shard-locally — build + write the merged
     docmap from the source docmaps (phase A), then bulk-decode, remap
     and re-encode the source segments against the in-memory docmap
     (phase B) — collapsing the previous two sequential Spark jobs into
@@ -421,13 +448,11 @@ def _make_fused_merger(gdir_str: str, storage: str, hot_df_copy: int,
                 "bytes": pd.Series([], dtype="int64"),
                 "segment_file": pd.Series([], dtype=object)})
         # conv/turn exactly as the Spark projection (_CONV_EXPR +
-        # substring_index cast): conv = doc_id minus its last ':'-suffix
-        # (clamped at empty), turn = numeric suffix or null
-        ids = allp["doc_id"].astype(str)
-        last = ids.str.rsplit(":", n=1).str[-1]
-        allp["conv"] = [s[: max(len(s) - len(sfx) - 1, 0)]
-                        for s, sfx in zip(ids, last)]
-        allp["turn"] = pd.to_numeric(last, errors="coerce")
+        # substring_index cast): conv = doc_id before its last ':' (""
+        # without one), turn = the numeric suffix after it, or null
+        head_sep_tail = allp["doc_id"].astype(str).str.rpartition(":")
+        allp["conv"] = head_sep_tail[0]
+        allp["turn"] = pd.to_numeric(head_sep_tail[2], errors="coerce")
         d = allp.sort_values(["conv", "turn", "src_gen", "src_ord"],
                              kind="mergesort").reset_index(drop=True)
         dm_metric = write_docmap((shard,), d).iloc[0].to_dict()
@@ -436,7 +461,7 @@ def _make_fused_merger(gdir_str: str, storage: str, hot_df_copy: int,
         # ---- phase B against the in-memory docmap --------------------
         dls_dm = d["dl"].to_numpy()
         avgdl_local = float(dls_dm.mean()) if len(dls_dm) else 0.0
-        sg = np.array([gen_index[x] for x in d["src_gen"]], dtype=np.int64)
+        sg = d["src_gen"].map(gen_index).to_numpy(dtype=np.int64)
         so = d["src_ord"].to_numpy().astype(np.int64)
         by_gen: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for gi in np.unique(sg):
@@ -510,8 +535,8 @@ def merge_generations(spark: SparkSession, index_root: str,
             # co-located FUSED path: n_new divides every generation's
             # shard count, so hash mod n_new == (hash mod n_old) mod
             # n_new — destination shard s owns exactly the source shards
-            # {t : t % n_new == s}. ONE task per destination performs
-            # both merge phases shard-locally (docmap build + segment
+            # {t : t % n_new == s}. ONE kernel call per destination
+            # performs both merge phases shard-locally (docmap build + segment
             # re-encode) — see _make_fused_merger. Collapses the two
             # sequential Spark jobs (docmap write + collect, then kernel
             # pass re-reading those docmaps) into a single job.
@@ -528,10 +553,17 @@ def merge_generations(spark: SparkSession, index_root: str,
                          f"{gdirs[g['id']]}/{docmap_files[(g['id'], t_src)]}"))
             # explicit repartition: AQE would coalesce this 16-row
             # shuffle into ONE partition and serialize the heavy
-            # per-destination kernels (measured 16× wall blowup)
+            # per-destination kernels (measured 16× wall blowup). It
+            # hash-partitions the shard numbers, so destinations spread
+            # over fewer partitions than there are destinations (8 over
+            # 5 measured, up to 3 in one task), not one per task. The
+            # seed is a pandas frame: Arrow makes it a local relation,
+            # where a Python list would be a Python RDD whose scan starts
+            # Python tasks that do no engine work.
             dests = sorted(dm_sources)
             dest_df = spark.createDataFrame(
-                [(sh,) for sh in dests], "shard int"
+                pd.DataFrame({"shard": np.asarray(dests, dtype=np.int32)}),
+                "shard int",
             ).repartition(len(dests), "shard")
             fused = [r.asDict() for r in
                      dest_df.groupBy("shard").applyInPandas(
@@ -605,7 +637,8 @@ def merge_generations(spark: SparkSession, index_root: str,
         # Broadcast while the doc count allows; at larger scale this
         # becomes an ordinary shuffle join ∝ posting count.
         gen_map = spark.createDataFrame(
-            [(g["id"], i) for i, g in enumerate(gens)],
+            pd.DataFrame({"src_gen": [g["id"] for g in gens],
+                          "gen_i": np.arange(len(gens), dtype=np.int32)}),
             "src_gen string, gen_i int")
         local_mask = (1 << ORD_SHARD_SHIFT) - 1
         mapping = (spark.read.parquet(
@@ -637,8 +670,6 @@ def _finish_merge(spark, index_root, m, gens, gdir, generation, n_shards,
     # give it an empty segment file so readers resolve every name
     for sh, dm_name in dm_names.items():
         if sh not in seg_names:
-            from geospatial_spark.plans.build import _seg_schema
-
             name = lc.segment_file(sh, dm_name.split("-")[-1].split(".")[0]
                                    if storage == lc.STORAGE_PUT else None)
             _write_parquet(_seg_schema().empty_table(), gdir / name, storage)
